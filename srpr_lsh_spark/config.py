@@ -12,7 +12,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 def tune_allocator_env() -> None:
@@ -73,11 +73,11 @@ class DedupConfig:
     sim_bits: int = 40          # b per table
     fingerprint_dim: int = 32   # D — matches the reference embedding dim (main.cpp:62)
     cosine_threshold: float = 0.997  # exact-verify acceptance on fingerprints
-    # phase-1 fingerprint lookup: collected ONCE to a Python broadcast var and
-    # probed inside one mapInPandas (no per-branch BroadcastExchange builds —
-    # the round-3 scaling gap). Above this row count the stage falls back to
-    # the join-based plan (the 10¹²-clip path: sort-merge on bucketed
-    # signatures). 5M rows ≈ 0.9 GB payload at d=32 — a sane broadcast ceiling.
+    # phase-1 fingerprint lookup: collected ONCE, shipped as memmapped .npy
+    # files and probed inside one mapInPandas (no per-branch
+    # BroadcastExchange builds — the round-3 scaling gap). Above this row
+    # count the stage falls back to the join-based plan (the 10¹²-clip path:
+    # sort-merge on bucketed signatures). 5M rows ≈ 0.9 GB of lookup at d=32.
     fp_collect_max_rows: int = 5_000_000
     # ceiling for the text verify's driver-collected shingle-CSR lookup
     # (operators/verify.py::verify_text_pairs, r6): each row costs ~8 B per
@@ -85,18 +85,10 @@ class DedupConfig:
     # — the practical addFile/memmap bound. Beyond it the stage falls back to
     # the join plan (result-identical, parity-tested; the 10¹²-clip path).
     text_collect_max_rows: int = 2_000_000
-    # how the collected phase-1 lookup reaches workers. True (default): write
-    # .npy files, ship via sc.addFile, np.memmap in workers — ONE page-cache
-    # copy per node, no per-worker unpickle (the r5 fix for the
-    # process-isolated verify anti-scale: a Python broadcast is unpickled
-    # once PER WORKER PROCESS, GBs of duplicated RSS at 16 workers; see
-    # kernels/cosine.py::save_fp_lookup). False: classic Python broadcast.
-    # Result-identical either way (parity-tested).
-    fp_ship_files: bool = True
     # below this many TOTAL candidate rows (warehouse manifest count — driver
-    # metadata, no job) the audio verify skips the broadcast ladder and runs
+    # metadata, no job) the audio verify skips the lookup ladder and runs
     # the plain JVM-join phase-1 plan: the ladder's fixed costs (collect,
-    # broadcast build, spread shuffles) only pay for themselves on big
+    # lookup file write, spread shuffles) only pay for themselves on big
     # candidate sets (measured: win at 200k clips, 2.4× loss at 20k —
     # VERDICT r4 #2). Both plans are parity-tested equal.
     verify_small_join_max_pairs: int = 400_000
@@ -164,7 +156,6 @@ class DedupConfig:
     # shuffle_partitions anywhere (AQE only coalesces DOWN). On a real
     # cluster size it to (per-core work quantum × rows/byte), not to 64 MB.
     aqe_advisory_bytes: int = 8 << 20
-    extra: dict = field(default_factory=dict, compare=False)
 
     def __post_init__(self) -> None:
         if self.n_perm != self.bands * self.rows:
@@ -193,11 +184,9 @@ class DedupConfig:
         "containment_union_max_hashes",  # picks the index plan, never the result
         "fp_collect_max_rows",  # picks the phase-1 plan, never the result
         "text_collect_max_rows",  # picks the text-verify plan, never the result
-        "fp_ship_files",  # lookup transport, never the result
-        "verify_small_join_max_pairs",  # ditto
+        "verify_small_join_max_pairs",  # picks the verify plans, never the result
         "verify_decode_slice_rows",  # batch re-chunking, identical rows
         "signatures_chunks",  # chunk layout, identical rows
-        "extra",
     )
 
     def config_hash(self) -> str:

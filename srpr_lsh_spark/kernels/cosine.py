@@ -8,29 +8,32 @@ not shrink with cores (measured: verify stage speedup 1.04× at 4× cores,
 NOTES.md round-3 saga). On a real cluster the driver re-serializing the same
 lookup per plan branch is the coordinator bottleneck at every job.
 
-The replacement: collect the slim lookup ONCE on the driver, ship it ONCE as a
-Python broadcast variable, and evaluate phase 1 in a single ``mapInPandas``
-over the candidate frame — no joins, one build, and the per-worker unpickle is
-cached for the life of the worker process.
+The replacement: collect the slim lookup ONCE on the driver, write it ONCE as
+three ``.npy`` files (``save_fp_lookup``), ship them as files (``sc.addFile``
+on cluster masters, the source paths directly on local masters), and let each
+worker ``np.memmap`` them (``load_fp_lookup_mmap``). Phase 1 is then a single
+``mapInPandas`` over the candidate frame — no joins, one build, one
+page-cache copy per node, no per-worker unpickle.
 
 Two-tier evaluation inside the kernel (the int8 prefilter):
 
 1. quantized pass — fingerprints are L2-normalized at creation, so
-   ``q = round(127·fp)`` stores each vector in d bytes; ``(q_a·q_b)/127²``
-   approximates the exact dot within ``quant_margin(d)``. The bulk of the
-   candidate mass (near-parallel non-duplicates, hot-band star pairs) dies
-   here touching 4× less lookup memory per row than float32 would.
+   ``q = round(127·fp)`` (``quantize``) stores each vector in d bytes;
+   ``(q_a·q_b)/127²`` approximates the exact dot within ``quant_margin(d)``.
+   The bulk of the candidate mass (near-parallel non-duplicates, hot-band
+   star pairs) dies here touching 4× less lookup memory per row than float32
+   would.
 2. exact pass — survivors only: float32 rows promoted to float64, per-row
    ``einsum`` dot (sequential per-row summation ⇒ deterministic and
    partitioning-invariant). This is bit-compatible with the semantics of the
    previous JVM ``aggregate(zip_with(...))`` double-precision dot.
 
-Scale boundary: a Python broadcast of all fingerprints works to ~10⁷ clips
-(GBs); beyond ``DedupConfig.fp_collect_max_rows`` the verify stage falls back
-to the join-based plan, which is what a 10¹²-clip corpus needs anyway
-(sort-merge on a bucketed signatures table). The reference's analogue of this
-whole stage is the exact-cosine re-rank over LSH candidates
-(``src/lsh.h:132-145``); the zero-magnitude guard mirrors ``src/lsh.h:151-155``.
+Scale boundary: the collected lookup works to ~10⁷ clips (GBs of files);
+beyond ``DedupConfig.fp_collect_max_rows`` the verify stage falls back to the
+join-based plan, which is what a 10¹²-clip corpus needs anyway (sort-merge on
+a bucketed signatures table). The reference's analogue of this whole stage is
+the exact-cosine re-rank over LSH candidates (``src/lsh.h:132-145``); the
+zero-magnitude guard mirrors ``src/lsh.h:151-155``.
 """
 
 from __future__ import annotations
@@ -40,22 +43,14 @@ import tempfile
 import uuid
 
 import numpy as np
-import pandas as pd
 
 _QSCALE = 127.0
 
 
-def build_fp_lookup(ids, fps: np.ndarray) -> dict:
-    """Driver-side: build the broadcast payload from the collected slim
-    ``(clip_id, fp)`` projection.
-
-    ``ids``: sequence of clip_id strings; ``fps``: (n, d) float32 (rows are
-    L2-normalized or all-zero). Returns dict with a hash index (id → row),
-    the float32 matrix, and the int8-quantized matrix."""
-    idx = pd.Index(np.asarray(ids, dtype=object))
-    fp = np.ascontiguousarray(fps, dtype=np.float32)
-    q = np.clip(np.rint(fp * _QSCALE), -_QSCALE, _QSCALE).astype(np.int8)
-    return {"index": idx, "fp": fp, "q": q}
+def quantize(fp: np.ndarray) -> np.ndarray:
+    """int8 image ``round(127·fp)`` of unit-norm (or zero) fingerprint rows —
+    the prefilter representation ``pair_cosines`` dots first."""
+    return np.clip(np.rint(fp * _QSCALE), -_QSCALE, _QSCALE).astype(np.int8)
 
 
 def save_fp_lookup(ids, fps: np.ndarray, out_dir: "str | None" = None):
@@ -76,8 +71,16 @@ def save_fp_lookup(ids, fps: np.ndarray, out_dir: "str | None" = None):
     index build at all. Returns ``(prefix, paths)``; pass each path to
     ``sc.addFile`` and give workers ``prefix`` (they resolve via
     ``SparkFiles.get``)."""
-    ids_list = [s if isinstance(s, str) else str(s) for s in np.asarray(ids, dtype=object)]
-    enc = [s.encode("utf-8") for s in ids_list]
+    ids_s, order = sorted_ids(ids)
+    fp = np.ascontiguousarray(np.asarray(fps, dtype=np.float32)[order])
+    return write_lookup("fplk", out_dir, {"ids": ids_s, "fp": fp, "q": quantize(fp)})
+
+
+def sorted_ids(ids) -> "tuple[np.ndarray, np.ndarray]":
+    """Driver-side: ``(sorted fixed-width utf-8 id array, order)`` — the
+    probe key of a memmapped lookup; ``order`` re-lays the payload rows."""
+    enc = [(s if isinstance(s, str) else str(s)).encode("utf-8")
+           for s in np.asarray(ids, dtype=object)]
     if any(b"\x00" in b for b in enc):
         # the fixed-width S dtype pads with NULs, so an id ENDING in one would
         # compare equal to its padded shorter sibling — make the precondition
@@ -86,12 +89,17 @@ def save_fp_lookup(ids, fps: np.ndarray, out_dir: "str | None" = None):
     w = max((len(b) for b in enc), default=1)
     ids_s = np.array(enc, dtype=f"S{w}") if enc else np.empty(0, dtype=f"S{w}")
     order = np.argsort(ids_s, kind="stable")
-    fp = np.ascontiguousarray(np.asarray(fps, dtype=np.float32)[order])
-    q = np.clip(np.rint(fp * _QSCALE), -_QSCALE, _QSCALE).astype(np.int8)
-    prefix = f"fplk_{uuid.uuid4().hex}"
-    out_dir = out_dir or tempfile.mkdtemp(prefix="fplk_")
+    return ids_s[order], order
+
+
+def write_lookup(kind: str, out_dir: "str | None", arrays: dict):
+    """Driver-side: save each named array as ``<prefix>_<name>.npy`` under a
+    fresh ``<kind>_<uuid>`` prefix (in a new temp dir when ``out_dir`` is
+    None). Returns ``(prefix, paths)``."""
+    prefix = f"{kind}_{uuid.uuid4().hex}"
+    out_dir = out_dir or tempfile.mkdtemp(prefix=f"{kind}_")
     paths = []
-    for name, arr in (("ids", ids_s[order]), ("fp", fp), ("q", q)):
+    for name, arr in arrays.items():
         p = os.path.join(out_dir, f"{prefix}_{name}.npy")
         np.save(p, arr)
         paths.append(p)
@@ -123,11 +131,8 @@ def load_fp_lookup_mmap(prefix: str, get_path) -> dict:
 
 
 def _indexer(lookup: dict, ids) -> np.ndarray:
-    """id → row positions (−1 = absent), for either lookup flavor: the
-    in-memory broadcast dict (pandas hash index) or the memmapped file form
-    (binary search over the sorted fixed-width id array)."""
-    if "index" in lookup:
-        return lookup["index"].get_indexer(ids)
+    """id → row positions (−1 = absent): binary search over a memmapped
+    lookup's sorted fixed-width id array."""
     srt = lookup["ids_sorted"]
     n = len(srt)
     if n == 0:

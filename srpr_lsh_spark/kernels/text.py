@@ -9,10 +9,6 @@ division of labor as the reference's exact cosine re-rank (``src/lsh.h:132-145``
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 import numpy as np
 
 
@@ -88,13 +84,9 @@ def save_shingle_lookup(ids, flat: np.ndarray, offsets: np.ndarray,
     per row). Rows are re-laid-out by utf-8-encoded id order so the worker
     probe is a ``searchsorted`` on the fixed-width id array (no per-worker
     index build). Returns ``(prefix, paths)``."""
-    ids_list = [s if isinstance(s, str) else str(s) for s in np.asarray(ids, dtype=object)]
-    enc = [s.encode("utf-8") for s in ids_list]
-    if any(b"\x00" in b for b in enc):
-        raise ValueError("clip ids must not contain NUL bytes (S-dtype padding)")
-    w = max((len(b) for b in enc), default=1)
-    ids_s = np.array(enc, dtype=f"S{w}") if enc else np.empty(0, dtype=f"S{w}")
-    order = np.argsort(ids_s, kind="stable")
+    from srpr_lsh_spark.kernels.cosine import sorted_ids, write_lookup
+
+    ids_s, order = sorted_ids(ids)
     offsets = np.asarray(offsets, dtype=np.int64)
     flat = np.asarray(flat).view(np.uint64)
     lens = offsets[1:] - offsets[:-1]
@@ -112,14 +104,7 @@ def save_shingle_lookup(ids, flat: np.ndarray, offsets: np.ndarray,
         new_flat = flat[gather]
     else:
         new_flat = flat
-    prefix = f"txlk_{uuid.uuid4().hex}"
-    out_dir = out_dir or tempfile.mkdtemp(prefix="txlk_")
-    paths = []
-    for name, arr in (("ids", ids_s[order]), ("vals", new_flat), ("offs", new_off)):
-        p = os.path.join(out_dir, f"{prefix}_{name}.npy")
-        np.save(p, arr)
-        paths.append(p)
-    return prefix, paths
+    return write_lookup("txlk", out_dir, {"ids": ids_s, "vals": new_flat, "offs": new_off})
 
 
 # worker-side single-slot memmap cache (same policy as cosine._MMAP_CACHE)

@@ -17,7 +17,9 @@ so audio bytes move only for rows that still matter.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -73,11 +75,6 @@ TEXT_SCHEMA = StructType(
         StructField("jaccard", DoubleType(), False),
     ]
 )
-
-# source .npy files of the previous run's file-shipped shingle lookup —
-# single-slot policy, mirrors _PREV_FP_SOURCES
-_PREV_TXT_SOURCES: "list[str]" = []
-
 
 def _verify_text_join(pairs: DataFrame, clips: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Join-based text verify — the beyond-collect-scale / small-pair plan:
@@ -183,28 +180,11 @@ def verify_text_pairs(
         save_shingle_lookup,
     )
 
-    sc = pairs.sparkSession.sparkContext
     ids, flat, offsets = _collect_shingle_csr(clips, cfg)
-    # same source-lifetime discipline as the fp lookup (_phase1_cosine_broadcast):
-    # park sources in the session temp dir, delete the previous run's set
-    root = getattr(sc, "_temp_dir", None)
-    out_dir = os.path.join(root, "txlk") if root else None
-    if out_dir:
-        os.makedirs(out_dir, exist_ok=True)
-    for prev in _PREV_TXT_SOURCES:
-        try:
-            os.unlink(prev)
-        except OSError:
-            pass
-    _PREV_TXT_SOURCES.clear()
-    prefix, paths = save_shingle_lookup(ids, flat, offsets, out_dir=out_dir)
-    token = _ship_lookup(sc, paths)
-    _PREV_TXT_SOURCES.extend(paths)
-    if not out_dir:
-        import atexit
-
-        d = os.path.dirname(paths[0])
-        atexit.register(lambda: __import__("shutil").rmtree(d, ignore_errors=True))
+    prefix, token = _publish_lookup(
+        pairs.sparkSession.sparkContext, "txlk",
+        lambda d: save_shingle_lookup(ids, flat, offsets, out_dir=d),
+    )
 
     thr = cfg.jaccard_threshold
 
@@ -225,7 +205,7 @@ def _collect_fp_matrix(signatures: DataFrame, dim: int) -> "tuple[np.ndarray, np
     """Driver-side: the slim ``(clip_id, fp)`` projection as (ids, (n, d)
     float32) — via ``toArrow`` + a flat offsets/values view of the list
     column (no 200k-iteration Python conversion loop; the collect is the one
-    driver-serial step of the broadcast phase-1 plan, so its constant
+    driver-serial step of the lookup phase-1 plan, so its constant
     matters). Rows with missing/short fp stay zero (= silence, never links)."""
     tbl = signatures.select("clip_id", "fp").toArrow()
     ids = tbl.column("clip_id").to_numpy(zero_copy_only=False)
@@ -242,18 +222,33 @@ def _collect_fp_matrix(signatures: DataFrame, dim: int) -> "tuple[np.ndarray, np
     return ids, fps
 
 
-# source .npy files of the previous dedup run's file-shipped fp lookup —
-# deleted when the next run ships its lookup (single-slot policy; ADVICE r5)
-_PREV_FP_SOURCES: "list[str]" = []
+# source .npy files of the previous run's shipped lookup, per kind — deleted
+# when the next run of that kind ships its own (single-slot policy, matching
+# the workers' single-slot memmap caches; ADVICE r5)
+_PREV_SOURCES: "dict[str, list[str]]" = {}
 
 
-def _ship_lookup(sc, paths: "list[str]"):
-    """Make saved lookup ``.npy`` files reachable from workers. Returns a
-    picklable ``(mode, dir)`` token for ``_lookup_resolver``.
+def _publish_lookup(sc, kind: str, save) -> "tuple[str, tuple]":
+    """Driver-side: write a lookup via ``save(out_dir) -> (prefix, paths)``
+    and make its ``.npy`` files reachable from workers. Returns ``(prefix,
+    token)``; workers resolve basenames with ``_lookup_resolver(token)``.
 
-    On LOCAL masters (``local[N]`` and ``local-cluster[...]``) workers run on
-    the driver's host, so they open the SOURCE paths directly — no
-    ``addFile`` registration at all. This is not just an optimization:
+    Source lifetime. The SOURCE files must outlive their run: workers open
+    them directly on local masters, and executors validate registered files
+    against their source on first fetch on cluster masters (deleting the
+    source fails the fetch with "does not match contents"). PySpark's
+    per-session temp dir is shutdown-cleaned, so sources are parked under
+    ``sc._temp_dir/<kind>``; on top of that, each new run deletes the
+    PREVIOUS run's sources of the same kind, so a long-lived serving session
+    holds at most one lookup per kind (~up to 0.9 GB of fp lookup at the
+    collect ceiling) instead of one per dedup run (r5 ADVICE #1). Old files
+    already opened by workers are never re-read — no task references the old
+    prefix once the new lookup exists. The mkdtemp fallback (no session temp
+    dir) is removed at exit.
+
+    Transport. On LOCAL masters (``local[N]`` and ``local-cluster[...]``)
+    workers run on the driver's host, so they open the source paths directly
+    — no ``addFile`` registration at all. This is not just an optimization:
     registering a file while OTHER driver threads have jobs running races
     Spark's driver-side userFiles copy against a concurrently-launched
     task's ``updateDependencies`` fetch of the same target (local mode
@@ -262,21 +257,35 @@ def _ship_lookup(sc, paths: "list[str]"):
     local[8]/200k with the r6 thread-parallel verified build. On real
     cluster masters executors fetch into per-executor dirs under
     ``updateDependenciesLock``, so ``addFile`` stays the transport there."""
+    root = getattr(sc, "_temp_dir", None)
+    out_dir = os.path.join(root, kind) if root else None
+    if out_dir:
+        os.makedirs(out_dir, exist_ok=True)
+    for prev in _PREV_SOURCES.pop(kind, ()):
+        try:
+            os.unlink(prev)
+        except OSError:
+            pass
+    prefix, paths = save(out_dir)
+    _PREV_SOURCES[kind] = paths
+    if not out_dir:
+        atexit.register(shutil.rmtree, os.path.dirname(paths[0]), ignore_errors=True)
     if (sc.master or "").startswith("local"):
-        return ("dir", os.path.dirname(paths[0]))
+        return prefix, ("dir", os.path.dirname(paths[0]))
     for p in paths:
         sc.addFile(p)
-    return ("spark_files", None)
+    return prefix, ("spark_files", None)
 
 
 def _lookup_resolver(token):
-    """Worker-side: basename → local path, from a ``_ship_lookup`` token."""
+    """Worker-side: basename → local path, from a ``_publish_lookup`` token."""
     mode, d = token
     if mode == "dir":
         return lambda b: os.path.join(d, b)
     from pyspark import SparkFiles
 
     return SparkFiles.get
+
 
 PRE_SCHEMA = StructType(
     [
@@ -288,42 +297,24 @@ PRE_SCHEMA = StructType(
 )
 
 
-def _phase1_cosine_broadcast(
+def _phase1_cosine_lookup(
     pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
     stats: "dict | None" = None,
-):
+) -> DataFrame:
     """Phase-1 fingerprint cosine with ONE lookup build (the round-3 scaling
     fix): collect the slim ``(clip_id, fp)`` projection to the driver ONCE,
-    ship it ONCE, and evaluate both the int8 prefilter and the exact float64
-    dot in a single ``mapInPandas`` over the candidate frame — zero joins,
-    zero per-branch BroadcastExchange builds. Kernel + design rationale:
-    ``kernels/cosine.py``.
+    write it as ``.npy`` files that workers ``np.memmap`` (one page-cache copy
+    per node, no per-worker unpickle — the r5 process-executor anti-scale
+    fix), and evaluate both the int8 prefilter and the exact float64 dot in a
+    single ``mapInPandas`` over the candidate frame — zero joins, zero
+    per-branch BroadcastExchange builds. Kernel + design rationale:
+    ``kernels/cosine.py``; file lifetime and transport: ``_publish_lookup``.
 
-    Two ship mechanisms (``cfg.fp_ship_files``, result-identical):
-
-    - files (default): the lookup is written as ``.npy`` files, shipped via
-      ``sc.addFile``, and ``np.memmap``'d by workers — ONE page-cache copy
-      per node instead of one unpickled copy per worker process (the r5
-      process-executor anti-scale fix; rationale in
-      ``kernels/cosine.py::save_fp_lookup``);
-    - Python broadcast: each worker unpickles its own copy. Kept for
-      environments without a worker-readable scratch path.
-
-    Returns ``(frame, release)``: call ``release()`` once the frame has been
-    eagerly materialized (checkpointed) — in broadcast mode it destroys the
-    payload so repeated dedup runs in one long-lived session (bench reps,
-    serving jobs) don't accumulate up-to-GB lookup copies on driver and
-    executors (ADVICE r4). In files mode ``release`` is a no-op: sources and
-    fetched copies live in session-scoped scratch (executors validate
-    registered files against their SOURCE on first task, so early deletion
-    breaks fetches), and workers hold at most one lookup's memmaps open. The ``stats`` accumulators, when requested, are updated
-    inside a transformation, so their semantics are AT-LEAST-ONCE: a task
-    retry or speculative duplicate inflates them. They are reduction
-    *evidence*, never inputs to any result."""
-    import os
-
+    The ``stats`` accumulators, when requested, are updated inside a
+    transformation, so their semantics are AT-LEAST-ONCE: a task retry or
+    speculative duplicate inflates them. They are reduction *evidence*, never
+    inputs to any result."""
     from srpr_lsh_spark.kernels.cosine import (
-        build_fp_lookup,
         load_fp_lookup_mmap,
         pair_cosines,
         quant_margin,
@@ -332,53 +323,9 @@ def _phase1_cosine_broadcast(
 
     sc = pairs.sparkSession.sparkContext
     ids, fps = _collect_fp_matrix(signatures, cfg.fingerprint_dim)
-    if cfg.fp_ship_files:
-        # The lookup SOURCE must outlive its run: workers open it directly on
-        # local masters, and executors validate registered files against
-        # their source on first fetch on cluster masters (deleting the source
-        # fails the fetch with "does not match contents"). PySpark's
-        # per-session temp dir is shutdown-cleaned, so parking sources there
-        # bounds the leak to session lifetime; on top of that, each new run
-        # deletes the PREVIOUS run's source files (single-slot policy,
-        # matching _MMAP_CACHE) so a long-lived serving session holds at most
-        # one lookup's .npy files (~up to 0.9 GB at the collect ceiling)
-        # instead of one per dedup run (r5 ADVICE #1). Old files already
-        # opened by workers are never re-read — no task references the
-        # old prefix once the new lookup exists. The mkdtemp fallback (no
-        # session temp dir) is registered for atexit cleanup.
-        root = getattr(sc, "_temp_dir", None)
-        out_dir = os.path.join(root, "fplk") if root else None
-        if out_dir:
-            os.makedirs(out_dir, exist_ok=True)
-        for prev in _PREV_FP_SOURCES:
-            try:
-                os.unlink(prev)
-            except OSError:
-                pass
-        _PREV_FP_SOURCES.clear()
-        prefix, paths = save_fp_lookup(ids, fps, out_dir=out_dir)
-        token = _ship_lookup(sc, paths)
-        _PREV_FP_SOURCES.extend(paths)
-        if not out_dir:
-            import atexit
-
-            d = os.path.dirname(paths[0])
-            atexit.register(
-                lambda: __import__("shutil").rmtree(d, ignore_errors=True)
-            )
-
-        def get_lookup():
-            return load_fp_lookup_mmap(prefix, _lookup_resolver(token))
-
-        def release():
-            return None
-    else:
-        blookup = sc.broadcast(build_fp_lookup(ids, fps))
-
-        def get_lookup():
-            return blookup.value
-
-        release = blookup.destroy
+    prefix, token = _publish_lookup(
+        sc, "fplk", lambda d: save_fp_lookup(ids, fps, out_dir=d)
+    )
     thr, margin = cfg.cosine_threshold, quant_margin(cfg.fingerprint_dim)
     acc_in = sc.accumulator(0)
     acc_int8 = sc.accumulator(0)
@@ -387,7 +334,7 @@ def _phase1_cosine_broadcast(
         stats["int8_pass"] = acc_int8
 
     def gen(batches):
-        lk = get_lookup()
+        lk = load_fp_lookup_mmap(prefix, _lookup_resolver(token))
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -400,16 +347,16 @@ def _phase1_cosine_broadcast(
             out["cosine"] = cos
             yield out
 
-    return pairs.mapInPandas(gen, schema=PRE_SCHEMA), release
+    return pairs.mapInPandas(gen, schema=PRE_SCHEMA)
 
 
 def _phase1_cosine_join(
     pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
-    """Join-based phase 1 — the beyond-broadcast-scale path (fingerprint side
+    """Join-based phase 1 — the beyond-collect-scale path (fingerprint side
     too big to collect): two equi-joins attach fp rows, the dot runs JVM-side
     in whole-stage codegen. At 10¹² clips these become sort-merge joins on a
-    bucketed signatures table; below ``fp_collect_max_rows`` the broadcast
+    bucketed signatures table; below ``fp_collect_max_rows`` the lookup
     kernel above is strictly better (one build vs 3+, NOTES.md round-3 saga).
     Fingerprints are L2-normalized at creation; a zero vector (silence) gives
     dot = 0.0 — NOT null — so such pairs are dropped only because
@@ -441,8 +388,8 @@ def verify_audio_pairs(
 
     Three phases, each shrinking the set before the next gets more expensive:
     1. fingerprint cosine — int8-quantized prefilter + exact float64 dot in
-       one ``mapInPandas`` against a single Python-broadcast lookup (see
-       ``_phase1_cosine_broadcast``; join fallback above the collect ceiling) —
+       one ``mapInPandas`` against a single memmapped lookup (see
+       ``_phase1_cosine_lookup``; join fallback above the collect ceiling) —
        kills the giant hot-band star pairs and the mass of near-parallel
        non-duplicates;
     2. decimated-PCM sketch SNR from signatures, survivors only — kills
@@ -458,11 +405,11 @@ def verify_audio_pairs(
     footer metadata, zero Spark jobs). They pick the phase-1 plan:
 
     - ``n_candidates`` below ``cfg.verify_small_join_max_pairs`` → the plain
-      JVM-join plan. The broadcast ladder's fixed costs (driver collect,
-      broadcast build, extra spread shuffles) are a measured win at ≥200k
+      JVM-join plan. The lookup ladder's fixed costs (driver collect,
+      lookup file write, extra spread shuffles) are a measured win at ≥200k
       clips but pure overhead at bench-small corpora — the r4 sf0.1
       regression (VERDICT r4 #2). Both plans are parity-tested equal.
-    - else broadcast ladder while ``n_signatures`` fits the collect ceiling
+    - else lookup ladder while ``n_signatures`` fits the collect ceiling
       (``cfg.fp_collect_max_rows``), join plan beyond it (the 10¹²-clip
       path). When the counts aren't supplied (standalone use), one
       ``signatures.count()`` decides — inside the pipeline that action never
@@ -472,11 +419,10 @@ def verify_audio_pairs(
     ``int8_pass`` (read their ``.value`` after an action) — the
     candidate-mass-reduction evidence recorded by bench. At-least-once
     semantics (updated in a transformation): task retries can inflate them.
-    Populated only on the broadcast plan; the small-join plan records none.
+    Populated only on the lookup plan; the small-join plan records none.
     """
     sketch_thr = cfg.snr_db_threshold - cfg.sketch_margin_db
 
-    release = None
     small = (
         n_candidates is not None
         and n_candidates < cfg.verify_small_join_max_pairs
@@ -487,7 +433,7 @@ def verify_audio_pairs(
         if n_signatures is None:
             n_signatures = signatures.count()
         if n_signatures <= cfg.fp_collect_max_rows:
-            phase1, release = _phase1_cosine_broadcast(
+            phase1 = _phase1_cosine_lookup(
                 _spread(pairs), signatures, cfg, stats=stats
             )
         else:
@@ -503,8 +449,6 @@ def verify_audio_pairs(
     # but each phase computes once, which is also what a real cluster's
     # coordinator should pay (r6; reverts the bonus-window eager=False).
     cos_pass = phase1.localCheckpoint(eager=True)
-    if release is not None:
-        release()  # checkpoint is eager: the broadcast payload is dead weight now
 
     # phase 2: decimated-PCM sketch SNR on the cosine survivors only — kills
     # "fingerprint twins" (different clips whose spectra coincide) without

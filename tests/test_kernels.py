@@ -320,7 +320,8 @@ class TestTextKernels:
 
 
 class TestCosineLookup:
-    """kernels/cosine.py — the verify stage's one-build phase-1 kernel."""
+    """kernels/cosine.py — the verify stage's one-build phase-1 kernel, probed
+    through the file-shipped memmap lookup the pipeline uses."""
 
     @staticmethod
     def _unit_rows(rng, n, d):
@@ -328,12 +329,24 @@ class TestCosineLookup:
         m /= np.linalg.norm(m, axis=1, keepdims=True)
         return m
 
+    @staticmethod
+    def _lookup(tmp_path, ids, m):
+        """save_fp_lookup → load_fp_lookup_mmap, resolving in ``tmp_path``."""
+        import os
+
+        from srpr_lsh_spark.kernels.cosine import load_fp_lookup_mmap, save_fp_lookup
+
+        prefix, _ = save_fp_lookup(ids, m, out_dir=str(tmp_path))
+        return load_fp_lookup_mmap(
+            prefix, lambda name: os.path.join(str(tmp_path), name)
+        )
+
     def test_quant_margin_bound_holds(self):
         """|cos_q − cos_exact| ≤ quant_margin(d) over random unit pairs,
         including near-parallel ones (the regime the threshold lives in) —
         the soundness condition that lets the int8 prefilter drop pairs
         below threshold − margin without costing recall."""
-        from srpr_lsh_spark.kernels.cosine import build_fp_lookup, quant_margin
+        from srpr_lsh_spark.kernels.cosine import quant_margin, quantize
 
         rng = np.random.default_rng(7)
         d = 32
@@ -342,8 +355,7 @@ class TestCosineLookup:
         near = base + rng.normal(scale=0.01, size=base.shape).astype(np.float32)
         near /= np.linalg.norm(near, axis=1, keepdims=True)
         m = np.vstack([base, near])
-        lk = build_fp_lookup([str(i) for i in range(len(m))], m)
-        q = lk["q"].astype(np.float64) / 127.0
+        q = quantize(m).astype(np.float64) / 127.0
         ia = rng.integers(0, len(m), size=4000)
         ib = rng.integers(0, len(m), size=4000)
         ia = np.concatenate([ia, np.arange(500)])          # near-parallel pairs
@@ -352,12 +364,10 @@ class TestCosineLookup:
         approx = np.einsum("ij,ij->i", q[ia], q[ib])
         assert np.abs(approx - exact).max() < quant_margin(d)
 
-    def test_pair_cosines_matches_bruteforce(self):
+    def test_pair_cosines_matches_bruteforce(self, tmp_path):
         """pair_cosines ≡ exact-dot filter: same kept set, same cosines, for
         thresholds straddling the duplicate/non-duplicate boundary."""
-        from srpr_lsh_spark.kernels.cosine import (
-            build_fp_lookup, pair_cosines, quant_margin,
-        )
+        from srpr_lsh_spark.kernels.cosine import pair_cosines, quant_margin
 
         rng = np.random.default_rng(13)
         d = 32
@@ -367,7 +377,7 @@ class TestCosineLookup:
         dup /= np.linalg.norm(dup, axis=1, keepdims=True)
         m = np.vstack([m, dup, np.zeros((2, d), dtype=np.float32)])  # + silence
         ids = np.array([f"c{i}" for i in range(len(m))], dtype=object)
-        lk = build_fp_lookup(ids, m)
+        lk = self._lookup(tmp_path, ids, m)
         ia = np.concatenate([np.arange(60), rng.integers(0, len(m), size=2000)])
         ib = np.concatenate([np.arange(60) + 300, rng.integers(0, len(m), size=2000)])
         thr = 0.997
@@ -389,59 +399,34 @@ class TestCosineLookup:
         )
         np.testing.assert_array_equal(keep2, [0])
 
-    def test_memmap_lookup_matches_broadcast_lookup(self, tmp_path):
-        """The file-shipped memmap lookup (save_fp_lookup → load_fp_lookup_mmap,
-        the r5 per-node-page-cache fix) is result-identical to the in-memory
-        broadcast dict through pair_cosines — same kept positions, bit-equal
-        cosines — including missing ids and ids longer than the stored
-        fixed width (the silent-S-truncation false-match trap)."""
-        import os
-
-        from srpr_lsh_spark.kernels.cosine import (
-            build_fp_lookup, load_fp_lookup_mmap, pair_cosines, quant_margin,
-            save_fp_lookup,
-        )
+    def test_memmap_lookup_misses_absent_and_overwidth_ids(self, tmp_path):
+        """The memmapped lookup's fixed-width id probe misses cleanly on ids
+        it does not hold, including ids longer than the stored width (the
+        silent-S-truncation false-match trap), while unsorted, varying-width
+        stored ids still hit."""
+        from srpr_lsh_spark.kernels.cosine import pair_cosines, quant_margin
 
         rng = np.random.default_rng(29)
         d = 32
-        m = self._unit_rows(rng, 200, d)
-        dup = m[:40] + rng.normal(scale=0.002, size=(40, d)).astype(np.float32)
-        dup /= np.linalg.norm(dup, axis=1, keepdims=True)
-        m = np.vstack([m, dup])
+        m = self._unit_rows(rng, 240, d)
         # deliberately NOT sorted, varying widths
         ids = np.array([f"clip_{i * 7 % 240}" for i in range(len(m))], dtype=object)
-        lk_mem = build_fp_lookup(ids, m)
-        prefix, paths = save_fp_lookup(ids, m, out_dir=str(tmp_path))
-        lk_mm = load_fp_lookup_mmap(
-            prefix, lambda name: os.path.join(str(tmp_path), name)
-        )
-        thr = 0.997
-        ia = np.concatenate([np.arange(40), rng.integers(0, len(m), size=1500)])
-        ib = np.concatenate([np.arange(40) + 200, rng.integers(0, len(m), size=1500)])
-        a, b = ids[ia], ids[ib]
-        k1, c1, _ = pair_cosines(lk_mem, a, b, thr, quant_margin(d))
-        k2, c2, _ = pair_cosines(lk_mm, a, b, thr, quant_margin(d))
-        np.testing.assert_array_equal(k1, k2)
-        np.testing.assert_allclose(c1, c2, rtol=0, atol=0)
-        assert k1.size >= 1
+        lk = self._lookup(tmp_path, ids, m)
         # missing id and over-width id (would prefix-match "clip_1" if the
-        # S-cast truncation went unguarded) both miss cleanly in both forms
+        # S-cast truncation went unguarded) both miss
         probes_a = np.array(["clip_1", "clip_1_but_much_longer", "absent"], dtype=object)
         probes_b = np.array(["clip_8", "clip_8", "clip_8"], dtype=object)
-        for lk in (lk_mem, lk_mm):
-            keep, _, _ = pair_cosines(lk, probes_a, probes_b, -1.0, quant_margin(d))
-            np.testing.assert_array_equal(keep, [0])
+        keep, _, _ = pair_cosines(lk, probes_a, probes_b, -1.0, quant_margin(d))
+        np.testing.assert_array_equal(keep, [0])
 
-    def test_zero_fingerprints_never_pass(self):
+    def test_zero_fingerprints_never_pass(self, tmp_path):
         """Silence (all-zero fp) must never link: dot = 0 < threshold — the
         zero-magnitude guard (reference lsh.h:151-155) as a threshold."""
-        from srpr_lsh_spark.kernels.cosine import (
-            build_fp_lookup, pair_cosines, quant_margin,
-        )
+        from srpr_lsh_spark.kernels.cosine import pair_cosines, quant_margin
 
         z = np.zeros((4, 32), dtype=np.float32)
         ids = np.array(["a", "b", "c", "d"], dtype=object)
-        lk = build_fp_lookup(ids, z)
+        lk = self._lookup(tmp_path, ids, z)
         keep, _, _ = pair_cosines(
             lk, ids[:2], ids[2:], 0.997, quant_margin(32)
         )

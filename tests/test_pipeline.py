@@ -196,8 +196,8 @@ def test_g711_reencode_dedups_against_pcm_original(spark, tmp_path):
 
 
 def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path):
-    """The two phase-1 plans — python-broadcast lookup (below
-    fp_collect_max_rows) and the join-based beyond-broadcast-scale fallback —
+    """The two phase-1 plans — the memmapped fp lookup (below
+    fp_collect_max_rows) and the join-based beyond-collect-scale fallback —
     must verify the SAME pairs with the SAME cosines: the int8 prefilter is
     sound (margin bound), so plan choice can never change results."""
     import dataclasses
@@ -223,15 +223,13 @@ def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path):
             for r in df.collect()
         )
 
-    got_files = rows(verify_audio_pairs(cands, clips, sigs, cfg))  # default: addFile+memmap
-    cfg_bcast = dataclasses.replace(cfg, fp_ship_files=False)      # python broadcast
-    got_bcast = rows(verify_audio_pairs(cands, clips, sigs, cfg_bcast))
+    got_lookup = rows(verify_audio_pairs(cands, clips, sigs, cfg))
     cfg_join = dataclasses.replace(cfg, fp_collect_max_rows=0)  # force fallback
     got_join = rows(verify_audio_pairs(cands, clips, sigs, cfg_join))
-    assert got_files == got_bcast == got_join
-    assert len(got_files) > 0
+    assert got_lookup == got_join
+    assert len(got_lookup) > 0
     # plan knobs must not invalidate checkpoints (layout fields, not semantics)
-    assert cfg.config_hash() == cfg_join.config_hash() == cfg_bcast.config_hash()
+    assert cfg.config_hash() == cfg_join.config_hash()
 
 
 def test_text_lookup_plan_matches_join_plan(spark, tmp_path):

@@ -1,0 +1,90 @@
+"""The dedup half of the PLANS.md physical-plan audit (checks 4–6).
+
+Each check inspects the planned physical plan of the same frame PLANS.md
+documents, on a small synthetic clips corpus read back from parquet so scans
+are prunable. The checks are structural (shuffle contents, scan pruning,
+join strategy), not timing. Checks 1–3 read the sf tables and stay in
+``tools/plan_audit.py``."""
+
+import re
+
+import pytest
+from pyspark.sql import functions as F
+
+from srpr_lsh_spark.config import DedupConfig
+from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, SOURCE_SIMHASH, space_candidates
+from srpr_lsh_spark.operators.signatures import compute_signatures
+from srpr_lsh_spark.plans.pipeline import run_dedup
+from srpr_lsh_spark.sources.synth import SynthParams, synthesize_clips
+
+CFG = DedupConfig(shuffle_partitions=8)
+
+
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+@pytest.fixture(scope="module")
+def corpus(spark, tmp_path_factory):
+    tmp = tmp_path_factory.mktemp("plan_audit")
+    params = SynthParams(n_clips=400, block_size=100, seed=42,
+                         min_dur_ms=300, max_dur_ms=900)
+    clips, _ = synthesize_clips(spark, params, out_dir=str(tmp / "data"))
+    res = run_dedup(spark, clips, CFG, warehouse_dir=str(tmp / "wh"),
+                    resume=False, stop_after="candidates")
+    return clips, res
+
+
+def test_candidates_exchanges_carry_no_audio_bytes(corpus):
+    """Audio isolation: no Exchange of the candidates BUILD plan carries the
+    ``bytes`` column. The warehouse frame is a checkpoint read-back (scan
+    only), so compose the un-checkpointed signatures→banding plan: it starts
+    at the clips scan (bytes included) and must decode in the scan stage."""
+    clips, _ = corpus
+    sigs = compute_signatures(clips, CFG)
+    cands = space_candidates(sigs, CFG, SOURCE_MINHASH).unionByName(
+        space_candidates(sigs, CFG, SOURCE_SIMHASH)
+    )
+    blocks = re.split(r"\n\n", _formatted(cands))
+    exch = [b for b in blocks
+            if re.match(r"\(\d+\) (Exchange|BroadcastExchange)", b.strip())]
+    assert exch
+    assert not [b.splitlines()[0] for b in exch if re.search(r"\bbytes#", b)]
+
+
+def test_containment_prunes_clips_scan(corpus):
+    """Containment's transcript-scanning kernels read only (clip_id,
+    transcript) from the clips parquet — inspected on the LIVE kernel frames,
+    since the composed containment plan hides them behind the lazy index
+    checkpoint."""
+    from srpr_lsh_spark.operators.substring import (
+        _shingle_df_counts,
+        _shingle_index,
+        containment_candidates,
+    )
+
+    clips, res = corpus
+    frames = [
+        _shingle_df_counts(clips, CFG),
+        _shingle_index(clips, CFG),
+        containment_candidates(clips, res["signatures"], CFG),
+    ]
+    scans = [s for f in frames
+             for s in re.findall(r"ReadSchema: struct<([^>]*)>", _formatted(f))]
+    clip_scans = [s for s in scans if "transcript" in s]
+    assert clip_scans, scans
+    assert all("bytes" not in s for s in clip_scans), clip_scans
+
+
+def test_verify_phase1_is_join_free(corpus):
+    """Phase 1 probes one shipped lookup inside a mapInPandas: zero
+    BroadcastExchange in its sub-plan."""
+    from srpr_lsh_spark.operators.verify import _phase1_cosine_lookup
+
+    _, res = corpus
+    cands = res["candidates"].filter(F.col("source") == SOURCE_SIMHASH)
+    phase1 = _phase1_cosine_lookup(cands, res["signatures"], CFG)
+    plan = phase1._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastExchange") == 0, plan

@@ -66,7 +66,7 @@ def main(argv=None) -> int:
     ap.add_argument("--conf", action="append", default=[],
                     metavar="KEY=VALUE",
                     help="DedupConfig field override, repeatable "
-                         "(e.g. --conf minhash_perms=128)")
+                         "(e.g. --conf shuffle_partitions=64)")
     ap.add_argument("--make-pyfiles-zip", metavar="OUT_ZIP",
                     help="write the --py-files package zip and exit "
                          "(run locally, before spark-submit)")
@@ -112,18 +112,12 @@ def main(argv=None) -> int:
         if not hasattr(defaults, k):
             ap.error(f"unknown DedupConfig field: {k}")
         cur = getattr(defaults, k)
-        # strict bool parsing (json.loads('1') would silently assign int 1)
-        # and a clean CLI error for any malformed/uncoercible value
-        # (r5 ADVICE #4)
-        if isinstance(cur, bool):
-            if v.lower() not in ("true", "false"):
-                ap.error(f"--conf {k} expects true/false, got {v!r}")
-            overrides[k] = v.lower() == "true"
-        else:
-            try:
-                overrides[k] = type(cur)(v)
-            except (TypeError, ValueError):
-                ap.error(f"--conf {k}: cannot coerce {v!r} to {type(cur).__name__}")
+        # every field is an int or float: a clean CLI error for any
+        # malformed/uncoercible value (r5 ADVICE #4)
+        try:
+            overrides[k] = type(cur)(v)
+        except (TypeError, ValueError):
+            ap.error(f"--conf {k}: cannot coerce {v!r} to {type(cur).__name__}")
     cfg = DedupConfig(**overrides) if overrides else DedupConfig()
 
     clips = spark.read.parquet(args.input)

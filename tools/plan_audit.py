@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Mechanical re-run of the six PLANS.md physical-plan checks.
+"""Mechanical re-run of the query-side PLANS.md physical-plan checks (1–3).
 
-    python tools/plan_audit.py            # prints the six-row table, exits
+    python tools/plan_audit.py            # prints the three-row table, exits
                                           # non-zero if any check fails
 
 Each check inspects the EXECUTED plan (post-AQE where applicable) of the same
-query PLANS.md documents, so the judge/CI can re-verify the plan claims
-without reading git history (VERDICT r4 #8). Runs at tiny scale — the checks
-are structural (pushdown, pruning, join strategy, shuffle contents), not
-timing.
+query PLANS.md documents, so CI can re-verify the plan claims without reading
+git history (VERDICT r4 #8). The checks are structural (pushdown, pruning,
+join strategy), not timing. They read the sf tables under
+``SPARK_GRAFT_SF_DIR``; the dedup checks 4–6 need only a synthetic corpus and
+run in tier-1 as ``tests/test_plan_audit.py``.
 """
 
 from __future__ import annotations
@@ -16,7 +17,6 @@ from __future__ import annotations
 import os
 import re
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,16 +33,10 @@ def _simple(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _exchange_blocks(plan: str) -> "list[str]":
-    """Node blocks of a formatted explain whose operator is an Exchange."""
-    blocks = re.split(r"\n\n", plan)
-    return [b for b in blocks if re.match(r"\(\d+\) (Exchange|BroadcastExchange)", b.strip())]
-
-
 def main() -> int:
     from pyspark.sql import SparkSession
 
-    from srpr_lsh_spark.config import DedupConfig, tune_allocator_env
+    from srpr_lsh_spark.config import tune_allocator_env
 
     tune_allocator_env()
     spark = (
@@ -57,13 +51,6 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as em
-
-    from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH
-    from srpr_lsh_spark.operators.signatures import compute_signatures
-    from srpr_lsh_spark.operators.substring import containment_candidates
-    from srpr_lsh_spark.operators.verify import _phase1_cosine_broadcast
-    from srpr_lsh_spark.plans.pipeline import run_dedup
-    from srpr_lsh_spark.sources.synth import SynthParams, synthesize_clips
 
     qs = em.queries()
     rows: list[tuple[str, str, bool, str]] = []
@@ -92,70 +79,6 @@ def main() -> int:
     ok = n_bhj >= 2 and n_smj == 0
     rows.append(("broadcast joins", "join_dims", ok,
                  f"{n_bhj}x BroadcastHashJoin, {n_smj}x SortMergeJoin"))
-
-    # 4/5/6 need a clips corpus on parquet (so scans are prunable) ----------
-    with tempfile.TemporaryDirectory(prefix="plan_audit_") as tmp:
-        params = SynthParams(n_clips=400, block_size=100, seed=42,
-                             min_dur_ms=300, max_dur_ms=900)
-        clips, _ = synthesize_clips(spark, params, out_dir=f"{tmp}/data")
-        cfg = DedupConfig(shuffle_partitions=16)
-        res = run_dedup(spark, clips, cfg, warehouse_dir=f"{tmp}/wh",
-                        resume=False, stop_after="candidates")
-
-        # 4: no audio bytes in any Exchange of the candidates BUILD plan —
-        # the warehouse frame is a checkpoint read-back (scan only), so
-        # compose the un-checkpointed signatures→banding plan: it starts at
-        # the clips scan (bytes included) and must decode in the scan stage,
-        # never shuffle the bytes column
-        from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, space_candidates
-
-        live_sigs = compute_signatures(clips, cfg)
-        live_cands = space_candidates(live_sigs, cfg, SOURCE_MINHASH).unionByName(
-            space_candidates(live_sigs, cfg, SOURCE_SIMHASH)
-        )
-        plan = _formatted(live_cands)
-        exch = _exchange_blocks(plan)
-        bad = [b.splitlines()[0] for b in exch if re.search(r"\bbytes#", b)]
-        ok = bool(exch) and not bad
-        rows.append(("audio isolation", "dedup candidates", ok,
-                     f"{len(exch)} Exchange nodes, {len(bad)} carrying bytes"))
-
-        # 5: containment's transcript-scanning kernels prune the clips scan
-        # to (clip_id, transcript) — inspected on the LIVE kernel frames:
-        # the composed containment plan hides them behind the lazy index
-        # checkpoint (Scan ExistingRDD), so the composed plan alone no
-        # longer exposes the parquet ReadSchema (r6)
-        from srpr_lsh_spark.operators.substring import (
-            _shingle_df_counts,
-            _shingle_index,
-        )
-
-        sigs = res["signatures"]
-        cc = containment_candidates(clips, sigs, cfg)
-        plans = [
-            _formatted(_shingle_df_counts(clips, cfg)),
-            _formatted(_shingle_index(clips, cfg)),
-            _formatted(cc),
-        ]
-        scans = [s for p in plans
-                 for s in re.findall(r"ReadSchema: struct<([^>]*)>", p)]
-        clip_scans = [s for s in scans if "transcript" in s]
-        ok = bool(clip_scans) and all("bytes" not in s for s in clip_scans)
-        rows.append(("containment index pruning", "_shingle_index", ok,
-                     f"clips-scan schemas: {clip_scans[:1] or scans[:1]}"))
-
-        # 6: verify phase 1 is join-free (one python broadcast, zero
-        # BroadcastExchange in the phase-1 sub-plan)
-        from pyspark.sql import functions as F
-
-        cands = res["candidates"].filter(F.col("source") == SOURCE_SIMHASH)
-        phase1, release = _phase1_cosine_broadcast(cands, sigs, cfg)
-        plan = _simple(phase1)
-        n_bx = plan.count("BroadcastExchange")
-        release()
-        ok = n_bx == 0
-        rows.append(("verify phase-1 join-free", "audio verify", ok,
-                     f"{n_bx}x BroadcastExchange in phase-1 sub-plan"))
 
     width = max(len(r[0]) for r in rows)
     failures = 0
