@@ -73,24 +73,15 @@ class DedupConfig:
     sim_bits: int = 40          # b per table
     fingerprint_dim: int = 32   # D — matches the reference embedding dim (main.cpp:62)
     cosine_threshold: float = 0.997  # exact-verify acceptance on fingerprints
-    # phase-1 fingerprint lookup: collected ONCE, shipped as memmapped .npy
-    # files and probed inside one mapInPandas (no per-branch
-    # BroadcastExchange builds — the round-3 scaling gap). Above this row
-    # count the stage falls back to the join-based plan (the 10¹²-clip path:
-    # sort-merge on bucketed signatures). 5M rows ≈ 0.9 GB of lookup at d=32.
-    fp_collect_max_rows: int = 5_000_000
-    # ceiling for the text verify's driver-collected shingle-CSR lookup
-    # (operators/verify.py::verify_text_pairs, r6): each row costs ~8 B per
-    # distinct shingle (~1-2 KB/row at transcript shapes), so 2M rows ≈ 2-4 GB
-    # — the practical addFile/memmap bound. Beyond it the stage falls back to
-    # the join plan (result-identical, parity-tested; the 10¹²-clip path).
-    text_collect_max_rows: int = 2_000_000
     # below this many TOTAL candidate rows (warehouse manifest count — driver
-    # metadata, no job) the audio verify skips the lookup ladder and runs
-    # the plain JVM-join phase-1 plan: the ladder's fixed costs (collect,
+    # metadata, no job) the text and audio verifies skip their driver-collected
+    # lookups and run the plain join plans: the lookups' fixed costs (collect,
     # lookup file write, spread shuffles) only pay for themselves on big
     # candidate sets (measured: win at 200k clips, 2.4× loss at 20k —
-    # VERDICT r4 #2). Both plans are parity-tested equal.
+    # VERDICT r4 #2). Both plans are parity-tested equal. Above it, a lookup
+    # (and the containment keep-set broadcast) runs while its estimated bytes
+    # fit spark.driver.maxResultSize, else the join plan — a Spark setting,
+    # not a field (operators/verify.py::use_lookup).
     verify_small_join_max_pairs: int = 400_000
     snr_db_threshold: float = 30.0   # decoded-PCM pair SNR acceptance (input_hint)
     # verify phase-3 decodes BOTH sides of each pair to float64 PCM; a full
@@ -112,13 +103,6 @@ class DedupConfig:
                                 # ≥3 informative hashes on those rows)
     containment_min_matches: int = 3  # sketch-hash matches needed to form a candidate
     min_substr_shingles: int = 8     # ignore ultra-short transcripts for containment
-    # ceiling for the driver-collected distinct-sketch-hash set that
-    # pre-filters the containment inverted index (operators/substring.py,
-    # guide §3.2 manual semi-join pattern): |union| ≤ bottom_k·n_clips, but
-    # shared-vocabulary corpora collapse it far below that (measured 100k at
-    # 200k clips). 20M hashes ≈ 160 MB broadcast; beyond it the stage falls
-    # back to the join-based plan (result-identical, parity-tested).
-    containment_union_max_hashes: int = 20_000_000
     # --- skew handling (SURVEY.md §4.3.2) ---
     # buckets larger than this use two-anchor star pairing, not all-pairs.
     # Recall trade (measured, tests/test_components.py::
@@ -181,9 +165,6 @@ class DedupConfig:
         "cc_max_iters",
         "input_split_bytes",
         "aqe_advisory_bytes",  # post-shuffle layout, never the result
-        "containment_union_max_hashes",  # picks the index plan, never the result
-        "fp_collect_max_rows",  # picks the phase-1 plan, never the result
-        "text_collect_max_rows",  # picks the text-verify plan, never the result
         "verify_small_join_max_pairs",  # picks the verify plans, never the result
         "verify_decode_slice_rows",  # batch re-chunking, identical rows
         "signatures_chunks",  # chunk layout, identical rows

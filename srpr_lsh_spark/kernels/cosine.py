@@ -28,10 +28,11 @@ Two-tier evaluation inside the kernel (the int8 prefilter):
    partitioning-invariant). This is bit-compatible with the semantics of the
    previous JVM ``aggregate(zip_with(...))`` double-precision dot.
 
-Scale boundary: the collected lookup works to ~10⁷ clips (GBs of files);
-beyond ``DedupConfig.fp_collect_max_rows`` the verify stage falls back to the
-join-based plan, which is what a 10¹²-clip corpus needs anyway (sort-merge on
-a bucketed signatures table). The reference's analogue of this whole stage is
+Scale boundary: the collected lookup must fit the driver collect budget,
+``spark.driver.maxResultSize`` (~7M clips at the 1 GiB default; see
+``operators/verify.py::use_lookup``); beyond it the verify stage falls back to
+the join-based plan, which is what a 10¹²-clip corpus needs anyway
+(sort-merge on a bucketed signatures table). The reference's analogue of this whole stage is
 the exact-cosine re-rank over LSH candidates (``src/lsh.h:132-145``); the
 zero-magnitude guard mirrors ``src/lsh.h:151-155``.
 """

@@ -21,12 +21,7 @@ without either giving up determinism (hogwild) or serializing on the driver.
 Full-batch ascent keeps the EXACT same gradient field and regularizer, is
 deterministic and partition-invariant (up to float summation order), and at
 cluster scale the per-epoch cost is one shuffle of (entities × d) partial
-sums — no parameter server needed below ~10⁷ entities × d ≤ 64. Beyond that
-boundary, ``train_bpr_blocked`` / ``train_srpr_blocked`` run the SAME ascent
-with DataFrame-resident factors (id-keyed, per-partition seeded init, join +
-``zip_with`` updates — no driver-resident matrix, no dense id remap);
-``tests/test_ml.py::test_blocked_matches_driver_resident`` pins the two
-paths equal on a shared fixture.
+sums — no parameter server needed below ~10⁷ entities × d ≤ 64.
 
 Epoch log-likelihood (``SRPRModel.h:80,133``) is accumulated in the same pass
 and reported per epoch in the returned history.
@@ -103,39 +98,6 @@ def init_factors(n: int, d: int, seed: int, offset: int = 0) -> np.ndarray:
     numpy's generator replaces the C++ engine, same distribution + fixed seed.
     ``offset`` decorrelates the user and item draws."""
     return np.random.default_rng(seed + offset).normal(0.0, 0.1, size=(n, d))
-
-
-def id_seeded_factors(
-    ids: np.ndarray, d: int, seed: int, offset: int = 0
-) -> np.ndarray:
-    """Per-id seeded N(0, 0.1) factor rows: the row for an entity is a pure
-    function of (id, seed, offset) — NO global ordering or driver-resident
-    matrix required, so a DataFrame-resident factor table can initialize each
-    of its partitions independently (the block-partitioned trainer's init).
-
-    Gaussians via Box-Muller over SplitMix64-derived uniforms, fully
-    vectorized. Distribution matches ``init_factors`` (N(0, 0.1)); the draws
-    themselves differ (positional vs id-keyed stream), which is fine — the
-    reference pins the distribution and seed discipline, not the bit pattern
-    (MatrixFactorization.h:44-52)."""
-    from srpr_lsh_spark.kernels.hashing import U64, _seed_stream, mix64
-
-    ids64 = ids.astype(U64)
-    n = ids.size
-    out = np.empty((n, d))
-    streams = _seed_stream(seed, 2 * ((d + 1) // 2) * 2, tag=303 + offset)
-    two_pi = 2.0 * np.pi
-    for pair in range((d + 1) // 2):
-        h1 = mix64(ids64 ^ streams[4 * pair])
-        h2 = mix64(ids64 ^ streams[4 * pair + 1])
-        # u1 ∈ (0, 1]: shift by 1 so log never sees 0
-        u1 = (h1.astype(np.float64) + 1.0) / 1.8446744073709552e19
-        u2 = h2.astype(np.float64) / 1.8446744073709552e19
-        r = np.sqrt(-2.0 * np.log(u1)) * 0.1
-        out[:, 2 * pair] = r * np.cos(two_pi * u2)
-        if 2 * pair + 1 < d:
-            out[:, 2 * pair + 1] = r * np.sin(two_pi * u2)
-    return out
 
 
 def _dense_index(triplets: DataFrame) -> "tuple[np.ndarray, np.ndarray]":
@@ -346,192 +308,6 @@ def train_srpr(
     core claim, pinned by tests/test_ml.py::test_srpr_beats_bpr_after_hashing)."""
     kernel = lambda xu, yi, yj: srpr_triplet_grads(xu, yi, yj, b)
     return _train(spark, triplets, kernel, d, epochs, learning_rate, lam, seed)
-
-
-@dataclass
-class DistributedFactorModel:
-    """Factors resident as DataFrames — the escape hatch past the
-    driver-resident path's ~10⁷-entity × d ≤ 64 boundary. ``factors_u`` /
-    ``factors_v``: (id long, vec array<double>), one row per entity, keyed by
-    the ORIGINAL ids (no dense remap, no driver collect anywhere)."""
-
-    factors_u: DataFrame
-    factors_v: DataFrame
-    d: int
-    history: "list[dict]"
-
-    def to_local(self) -> FactorModel:
-        """Collect into a driver-resident FactorModel (tests / small models
-        only — this is exactly the residency the blocked path avoids)."""
-        up = self.factors_u.orderBy("id").toPandas()
-        vp = self.factors_v.orderBy("id").toPandas()
-        return FactorModel(
-            user_ids=up["id"].to_numpy(),
-            item_ids=vp["id"].to_numpy(),
-            U=np.array(up["vec"].tolist()),
-            V=np.array(vp["vec"].tolist()),
-            history=self.history,
-        )
-
-
-def _init_factor_frame(spark, ids: DataFrame, d: int, seed: int, offset: int) -> DataFrame:
-    """(id) → (id, vec) with per-id seeded init — computed inside each
-    partition, never on the driver."""
-    schema = StructType(
-        [
-            StructField("id", LongType(), False),
-            StructField("vec", ArrayType(DoubleType(), False), False),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arr = id_seeded_factors(pdf["id"].to_numpy(), d, seed, offset)
-            yield pd.DataFrame({"id": pdf["id"], "vec": list(arr)})
-
-    return ids.mapInPandas(gen, schema=schema)
-
-
-def _epoch_blocked(spark, trip: DataFrame, fu: DataFrame, fv: DataFrame,
-                   kernel, d: int, lr: float, lam: float):
-    """One synchronous epoch with DataFrame-resident factors: three equi-joins
-    attach (uvec, ivec, jvec) to each triplet, the gradient pass pre-combines
-    per partition, per-entity sums reduce JVM-side, and the factor update is a
-    LEFT join + ``zip_with`` — entities are never collected. Per-epoch cost is
-    bounded by shuffles of the triplet and factor frames, not driver memory."""
-    schema = StructType(
-        [
-            StructField("kind", IntegerType(), False),
-            StructField("idx", LongType(), False),
-            StructField("cnt", LongType(), False),
-            StructField("g", ArrayType(DoubleType(), False), False),
-        ]
-    )
-
-    joined = (
-        trip.join(
-            fu.select(F.col("id").alias("u_idx"), F.col("vec").alias("uvec")), "u_idx"
-        )
-        .join(fv.select(F.col("id").alias("i_idx"), F.col("vec").alias("ivec")), "i_idx")
-        .join(fv.select(F.col("id").alias("j_idx"), F.col("vec").alias("jvec")), "j_idx")
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            u = pdf["u_idx"].to_numpy()
-            i = pdf["i_idx"].to_numpy()
-            j = pdf["j_idx"].to_numpy()
-            gxu, gyi, gyj, ll = kernel(
-                np.array(pdf["uvec"].tolist()),
-                np.array(pdf["ivec"].tolist()),
-                np.array(pdf["jvec"].tolist()),
-            )
-            yield _combine_partials(u, i, j, gxu, gyi, gyj, ll)
-
-    sums = (
-        joined.mapInPandas(gen, schema=schema)
-        .groupBy("kind", "idx")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            *[F.sum(F.col("g")[k]).alias(f"g{k}") for k in range(d)],
-        )
-        .localCheckpoint(eager=True)
-    )
-    loss = sums.filter(F.col("kind") == _K_LOSS).agg(
-        F.sum("g0").alias("ll"), F.sum("cnt").alias("n")
-    ).first()
-    loglik, n_triplets = float(loss["ll"] or 0.0), int(loss["n"] or 0)
-
-    def upd(fac: DataFrame, kind: int) -> DataFrame:
-        s = sums.filter(F.col("kind") == kind).select(
-            F.col("idx").alias("id"),
-            F.col("cnt"),
-            F.array(*[F.col(f"g{k}") for k in range(d)]).alias("g"),
-        )
-        decay = F.pow(F.lit(1.0 - lr * lam), F.col("cnt").cast("double"))
-        updated = F.zip_with(
-            "vec", "g", lambda x, y: x * decay + F.lit(lr) * y
-        )
-        return fac.join(s, "id", "left").select(
-            "id",
-            F.when(F.col("cnt").isNull(), F.col("vec"))
-            .otherwise(updated)
-            .alias("vec"),
-        ).localCheckpoint(eager=True)
-
-    return upd(fu, _K_USER), upd(fv, _K_ITEM), loglik, n_triplets
-
-
-def _train_blocked(
-    spark,
-    triplets: DataFrame,
-    kernel,
-    d: int,
-    epochs: int,
-    learning_rate: float,
-    lam: float,
-    seed: int,
-) -> DistributedFactorModel:
-    trip = (
-        triplets.select(
-            F.col("user_id").cast("long").alias("u_idx"),
-            F.col("pos_item").cast("long").alias("i_idx"),
-            F.col("neg_item").cast("long").alias("j_idx"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    fu = _init_factor_frame(
-        spark, trip.select(F.col("u_idx").alias("id")).distinct(), d, seed, 0
-    ).localCheckpoint(eager=True)
-    fv = _init_factor_frame(
-        spark,
-        trip.select(F.col("i_idx").alias("id"))
-        .unionByName(trip.select(F.col("j_idx").alias("id")))
-        .distinct(),
-        d, seed, 1,
-    ).localCheckpoint(eager=True)
-
-    history = []
-    for epoch in range(1, epochs + 1):
-        fu, fv, loglik, n = _epoch_blocked(
-            spark, trip, fu, fv, kernel, d, learning_rate, lam
-        )
-        history.append(
-            {
-                "epoch": epoch,
-                "loglik": loglik,
-                "avg_loglik": loglik / max(n, 1),
-                "n_triplets": n,
-            }
-        )
-    return DistributedFactorModel(factors_u=fu, factors_v=fv, d=d, history=history)
-
-
-def train_bpr_blocked(
-    spark, triplets: DataFrame, d: int = 32, epochs: int = 20,
-    learning_rate: float = 0.02, lam: float = 0.01, seed: int = 42,
-) -> DistributedFactorModel:
-    """BPR with DataFrame-resident factors — same gradient field, same
-    compounded decay, no driver-resident matrices (the module docstring's
-    block-partition escape hatch, written down)."""
-    return _train_blocked(
-        spark, triplets, bpr_triplet_grads, d, epochs, learning_rate, lam, seed
-    )
-
-
-def train_srpr_blocked(
-    spark, triplets: DataFrame, d: int = 32, b: int = 8, epochs: int = 8,
-    learning_rate: float = 0.03, lam: float = 0.001, seed: int = 42,
-) -> DistributedFactorModel:
-    """SRPR with DataFrame-resident factors."""
-    kernel = lambda xu, yi, yj: srpr_triplet_grads(xu, yi, yj, b)
-    return _train_blocked(
-        spark, triplets, kernel, d, epochs, learning_rate, lam, seed
-    )
 
 
 def epoch_history_df(spark, model: FactorModel) -> DataFrame:

@@ -12,7 +12,6 @@ from srpr_lsh_spark.operators.banding import (
     exact_content_edges,
     explode_bands,
     combined_candidates,
-    space_candidates,
 )
 from srpr_lsh_spark.operators.verify import verify_text_pairs, verify_audio_pairs
 from srpr_lsh_spark.operators.substring import containment_candidates, verify_containment
@@ -21,7 +20,6 @@ from srpr_lsh_spark.operators.components import connected_components
 __all__ = [
     "candidate_pairs",
     "combined_candidates",
-    "space_candidates",
     "compute_signatures",
     "connected_components",
     "containment_candidates",

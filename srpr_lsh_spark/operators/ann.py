@@ -52,11 +52,10 @@ def _with_srp_keys(
 
 
 def norm_expr(col):
-    """JVM-side L2 norm of a float array column (double math) — the fold
-    half of ``cosine_expr``, exposed so pair-scoring plans can hoist each
-    side's norm into a per-VECTOR projection instead of re-folding it per
-    pair (r6, guide §1.2): same expression on the same input ⇒ bit-identical
-    cosine, ~3× less higher-order-function work per scored pair."""
+    """JVM-side L2 norm of a float array column (double math). Pair-scoring
+    plans hoist each side's norm into a per-VECTOR projection and divide
+    ``dot_expr`` by the product, instead of re-folding it per pair (r6,
+    guide §1.2): ~3× less higher-order-function work per scored pair."""
     return F.sqrt(
         F.aggregate(
             F.transform(col, lambda x: x.cast("double") * x.cast("double")),
@@ -73,11 +72,6 @@ def dot_expr(a: str, b: str):
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def cosine_expr(a: str, b: str):
-    """JVM-side cosine similarity of two float array columns (double math)."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def lsh_candidates(

@@ -18,7 +18,7 @@ hot bands (near-identical mass content, zero fingerprints):
   a high-probability heuristic, not a guarantee — a member whose similarity
   to BOTH anchors falls below the verify threshold (while passing against
   other members) is stranded. Two forces make that rare in practice: the
-  full-signature collapse (``space_candidates``) guarantees capped buckets
+  full-signature collapse (``_space_parts``) guarantees capped buckets
   contain only DISTINCT signatures, and a true near-dup family inside one
   bucket tends to be mutually similar, so two independent anchors give two
   chances to attach. The residual gap is measured, not assumed:
@@ -28,19 +28,21 @@ hot bands (near-identical mass content, zero fingerprints):
 
 Id encoding (r6, guide §2.3 "narrower types" / r5 VERDICT next-round #2):
 the banding/pair subgraph shuffles tens of rows per clip, so
-``combined_candidates`` / ``space_candidates`` first dictionary-encode
-``clip_id`` strings to dense int64 via ``build_id_map`` (the SURVEY §2.3
-id-remap operator; reference analogue ``src/DataManager.h:79-105``), run the
-whole explode → sizes → pair → dedup pipeline on int64, and map back to
-strings only for the final (much smaller) deduped pair frame. The encoding is
-ORDER-PRESERVING (dense rank of the sorted ids), so min/max anchor choice,
-collapse representatives and the a < b pair canonicalization are exactly the
-string-order decisions — the decoded output is row-identical to the pre-r6
-string plan (pytest-pinned). Min/max/groupBy on int64 also run as
+``combined_candidates`` first dictionary-encodes ``clip_id`` strings to dense
+int64 via ``build_id_map`` (the SURVEY §2.3 id-remap operator; reference
+analogue ``src/DataManager.h:79-105``), runs the whole explode → sizes → pair
+→ dedup pipeline on int64, and maps back to strings only for the final (much
+smaller) deduped pair frame. The encoding is ORDER-PRESERVING (dense rank of
+the sorted ids), so min/max anchor choice, collapse representatives and the
+a < b pair canonicalization are exactly the string-order decisions — the
+decoded output is row-identical to the pre-r6 string plan (pytest-pinned).
+Min/max/groupBy on int64 also run as
 HashAggregate instead of the SortAggregate that string min/max forces.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -114,30 +116,34 @@ def _decode_pairs(pairs: DataFrame, id_map: DataFrame) -> DataFrame:
     )
 
 
-def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """signatures → bands(clip_id, band_id, band_hash, source).
+def _band_rows(df: DataFrame, source: str) -> DataFrame:
+    """One LSH space's ``(clip_id, band_id, band_hash)`` rows, on the
+    band-id layout: MinHash band i at i, SRP table t at SRP_BAND_OFFSET + t.
 
     Empty-transcript rows (band key sentinel -1) are excluded from the MinHash
     space: no shingles ⇒ no Jaccard evidence ⇒ only the exact-content path may
     link them. Zero fingerprints are NOT excluded from the SRP space — they
-    are the planted hot band the cap must absorb.
-    """
-    mh = (
-        signatures.select(
+    are the planted hot band the cap must absorb."""
+    if source == SOURCE_MINHASH:
+        return df.select(
             "clip_id", F.posexplode("band_keys").alias("band_id", "band_hash")
+        ).filter(F.col("band_hash") != F.lit(-1))
+    if source == SOURCE_SIMHASH:
+        return df.select(
+            "clip_id", F.posexplode("sim_keys").alias("t", "band_hash")
+        ).select(
+            "clip_id",
+            (F.col("t") + F.lit(SRP_BAND_OFFSET)).alias("band_id"),
+            "band_hash",
         )
-        .filter(F.col("band_hash") != F.lit(-1))
-        .withColumn("source", F.lit(SOURCE_MINHASH))
-    )
-    sh = signatures.select(
-        "clip_id", F.posexplode("sim_keys").alias("t", "band_hash")
-    ).select(
-        "clip_id",
-        (F.col("t") + F.lit(SRP_BAND_OFFSET)).alias("band_id"),
-        "band_hash",
-        F.lit(SOURCE_SIMHASH).alias("source"),
-    )
-    return mh.unionByName(sh)
+    raise ValueError(source)
+
+
+def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """signatures → bands(clip_id, band_id, band_hash, source), both spaces."""
+    return _band_rows(signatures, SOURCE_MINHASH).unionByName(
+        _band_rows(signatures, SOURCE_SIMHASH)
+    ).withColumn("source", _source_of_band())
 
 
 def _source_of_band() -> "F.Column":
@@ -210,8 +216,9 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     return small_pairs.unionByName(star_pairs).dropDuplicates(["a", "b", "source"])
 
 
-def space_candidates(signatures: DataFrame, cfg: DedupConfig, source: str) -> DataFrame:
-    """Candidate pairs for one LSH space with an exact-signature collapse.
+def _space_parts(signatures: DataFrame, source: str):
+    """(within-collapse star edges, banded rep rows) for one LSH space, with
+    an exact-signature collapse.
 
     Rows whose FULL signature is identical (all minhash components / all SRP
     table keys) are collapsed to their min-clip_id representative BEFORE
@@ -227,37 +234,13 @@ def space_candidates(signatures: DataFrame, cfg: DedupConfig, source: str) -> Da
       already star-linked).
 
     All emitted edges (star and bucket) still pass exact verification, so
-    this changes cost, never correctness of the final clusters.
-
-    Runs on int64-encoded ids internally (module docstring); the returned
-    frame carries the original string ids.
-    """
-    id_map = build_id_map(signatures)
-    enc = _encode(signatures, id_map)
-    within, bands = _space_parts(enc, cfg, source)
-    return _decode_pairs(candidate_pairs(bands, cfg).unionByName(within), id_map)
-
-
-def _space_parts(signatures: DataFrame, cfg: DedupConfig, source: str):
-    """(within-collapse star edges, banded rep rows) for one LSH space —
-    the two halves ``space_candidates`` composes. Factored out so
-    ``combined_candidates`` can run ONE bucket-join pass over both spaces."""
+    this changes cost, never correctness of the final clusters."""
     if source == SOURCE_MINHASH:
         eligible = signatures.filter(F.col("n_shingles") > 0)
         sig_hash = F.xxhash64("minhash")
-        explode_cols = lambda df: df.select(
-            "clip_id", F.posexplode("band_keys").alias("band_id", "band_hash")
-        ).filter(F.col("band_hash") != F.lit(-1))
     elif source == SOURCE_SIMHASH:
         eligible = signatures
         sig_hash = F.xxhash64("sim_keys")
-        explode_cols = lambda df: df.select(
-            "clip_id", F.posexplode("sim_keys").alias("t", "band_hash")
-        ).select(
-            "clip_id",
-            (F.col("t") + F.lit(SRP_BAND_OFFSET)).alias("band_id"),
-            "band_hash",
-        )
     else:
         raise ValueError(source)
 
@@ -275,14 +258,17 @@ def _space_parts(signatures: DataFrame, cfg: DedupConfig, source: str):
     # band rows carry NO source string: candidate_pairs derives it from the
     # band-id layout (_source_of_band), so the sizes/collect_list shuffles
     # move (id, band_id, hash) only
-    bands = explode_cols(rep_rows)
-    return within, bands
+    return within, _band_rows(rep_rows, source)
 
 
-def combined_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Both LSH spaces through ONE bucket-join pass (r5 stage-count cut).
+def combined_candidates(
+    signatures: DataFrame, cfg: DedupConfig,
+    sources: "tuple[str, ...]" = (SOURCE_MINHASH, SOURCE_SIMHASH),
+) -> DataFrame:
+    """Candidate pairs of the given LSH spaces through ONE bucket-join pass
+    (r5 stage-count cut).
 
-    Row-identical to ``space_candidates(MINHASH) ∪ space_candidates(SIMHASH)``
+    With both spaces it is row-identical to the union of the one-space calls
     (pytest-pinned): the band-id key spaces are disjoint ([0, bands) vs
     SRP_BAND_OFFSET+table), so buckets never mix across spaces and per-space
     bucket sizes are unchanged; ``source`` rides along and ``dropDuplicates``
@@ -296,11 +282,9 @@ def combined_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     final deduped pair frame is mapped back to strings."""
     id_map = build_id_map(signatures)
     enc = _encode(signatures, id_map)
-    mh_within, mh_bands = _space_parts(enc, cfg, SOURCE_MINHASH)
-    sh_within, sh_bands = _space_parts(enc, cfg, SOURCE_SIMHASH)
-    pairs = candidate_pairs(mh_bands.unionByName(sh_bands), cfg)
-    out = pairs.unionByName(mh_within).unionByName(sh_within)
-    return _decode_pairs(out, id_map)
+    withins, bands = zip(*(_space_parts(enc, s) for s in sources))
+    pairs = candidate_pairs(reduce(DataFrame.unionByName, bands), cfg)
+    return _decode_pairs(reduce(DataFrame.unionByName, withins, pairs), id_map)
 
 
 def exact_content_edges(signatures: DataFrame) -> DataFrame:

@@ -27,6 +27,10 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from srpr_lsh_spark.config import DedupConfig
 from srpr_lsh_spark.kernels.hashing import shingle_hashes
 from srpr_lsh_spark.kernels.text import normalize_transcript, sa_contains, suffix_array
+from srpr_lsh_spark.operators.verify import use_lookup
+
+# broadcast bytes per distinct sketch hash in the keep-set: (h long, df_ long)
+KEEP_SET_HASH_BYTES = 16
 
 
 def _shingle_index(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -92,9 +96,10 @@ def containment_candidates(
     inside the candidates stage these subtrees run concurrently with the LSH
     banding subgraph. Restricting the index by hash VALUE changes no df
     count and no match count, so the output is row-identical to the
-    unrestricted plan (pytest-pinned). Corpora whose sketch union exceeds
-    ``cfg.containment_union_max_hashes`` (the broadcast ceiling, guide §3.2)
-    fall back to the former join-everything plan."""
+    unrestricted plan (pytest-pinned). Corpora whose keep-set broadcast
+    (distinct sketch hashes × ``KEEP_SET_HASH_BYTES``) exceeds the driver
+    collect budget (``use_lookup``, guide §3.2) fall back to the former
+    join-everything plan, row-identical too (pytest-pinned)."""
     eligible = signatures.filter(F.col("n_shingles") >= cfg.min_substr_shingles)
     sketch = eligible.select(
         F.col("clip_id").alias("short"),
@@ -106,9 +111,9 @@ def containment_candidates(
         F.lit(cfg.containment_min_matches), F.ceil(F.col("sk_n") * 0.8)
     )
 
-    # one small sketch-side job gates the broadcast plan (no transcript scan)
-    n_union = sketch.select("h").distinct().count()
-    if n_union > cfg.containment_union_max_hashes:
+    # one small sketch-side job (the distinct count) gates the broadcast plan
+    # (no transcript scan)
+    if not use_lookup(sketch.select("h").distinct(), KEEP_SET_HASH_BYTES, cfg):
         # fallback: the former join-everything plan (sketch union too large
         # to broadcast — guide §3.2's cost caveat)
         index = _shingle_index(clips, cfg)

@@ -67,6 +67,69 @@ def _spread(pairs: DataFrame) -> DataFrame:
     return pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism)
 
 
+# Estimated driver-side bytes per row of each structure a lookup plan
+# collects, for ``use_lookup``. Each row carries its clip id as an Arrow
+# string (4 B offset + up to 16 chars; the synthetic ids are 13) and a 4 B
+# list offset; the fp lookup adds 4·fingerprint_dim B of float32 (measured
+# 149 B/row at d=32).
+ID_BYTES = 24
+# The shingle CSR holds one int64 hash per distinct shingle of each row. The
+# count is only known after the kernel pass, so the estimate assumes the mean
+# of the default synthetic mix, 200 shingles per row (measured 200.2: 1.60 MB
+# of hashes for 1,000 clips). Longer transcripts make it an underestimate.
+CSR_ROW_BYTES = 8 * 200 + ID_BYTES
+
+
+def collect_budget_bytes(sc) -> int:
+    """Bytes one driver collect or broadcast build may bring back:
+    ``spark.driver.maxResultSize`` (Spark aborts a job whose serialized task
+    results exceed it; 1 GiB by default), or the driver JVM's max heap when
+    it is 0 (unlimited). The only reader of that setting."""
+    limit = sc._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    return limit if limit > 0 else sc._jvm.java.lang.Runtime.getRuntime().maxMemory()
+
+
+def use_lookup(
+    rows: DataFrame, row_bytes: int, cfg: DedupConfig,
+    n_rows: "int | None" = None,
+    n_candidates: "int | None" = None,
+) -> bool:
+    """The lookup-vs-join choice of text verify, audio verify and the
+    containment prefilter: True collects a structure of ``rows`` to the
+    driver (lookup plan), False keeps the join plan.
+
+    - ``n_candidates`` below ``cfg.verify_small_join_max_pairs`` → join: the
+      lookup's fixed costs (one scan, driver collect, file ship) don't pay
+      for themselves on a small pair frame (measured: win at 200k clips,
+      2.4× loss at 20k — VERDICT r4 #2). ``None`` skips this check.
+    - else lookup while ``n_rows × row_bytes`` fits ``collect_budget_bytes``;
+      beyond it the join plan (the 10¹²-clip path). ``n_rows`` is a
+      driver-known count (warehouse manifest); when ``None``, one
+      ``rows.count()`` decides.
+
+    Every plan pair is parity-tested row-identical, so the choice moves cost,
+    never results."""
+    if n_candidates is not None and n_candidates < cfg.verify_small_join_max_pairs:
+        return False
+    if n_rows is None:
+        n_rows = rows.count()
+    return n_rows * row_bytes <= collect_budget_bytes(rows.sparkSession.sparkContext)
+
+
+def _collect_lists(df: DataFrame, col: str, dtype) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
+    """Driver-side: ``(clip_id, <col> list)`` rows as (ids, values, offsets)
+    — via ``toArrow`` + a flat offsets/values view of the list column, with
+    no per-row Python conversion (the collect is the one driver-serial step
+    of a lookup plan, so its constant matters). Row i's list is
+    ``values[offsets[i]:offsets[i + 1]]``; a null list is empty."""
+    tbl = df.select("clip_id", col).toArrow()
+    ids = tbl.column("clip_id").to_numpy(zero_copy_only=False)
+    lists = tbl.column(col).combine_chunks()
+    values = lists.values.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+    offsets = lists.offsets.to_numpy().astype(np.int64, copy=False)
+    return ids, values, offsets
+
+
 TEXT_SCHEMA = StructType(
     [
         StructField("a", StringType(), False),
@@ -77,10 +140,10 @@ TEXT_SCHEMA = StructType(
 )
 
 def _verify_text_join(pairs: DataFrame, clips: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Join-based text verify — the beyond-collect-scale / small-pair plan:
-    both transcripts joined onto each pair, shingled and compared in the UDF.
-    At 10¹² clips these joins run against a bucketed clips table; below the
-    collect ceiling with a large pair frame, the lookup plan is strictly
+    """Join-based text verify — the beyond-budget / small-pair plan: both
+    transcripts joined onto each pair, shingled and compared in the UDF. At
+    10¹² clips these joins run against a bucketed clips table; within the
+    collect budget with a large pair frame, the lookup plan is strictly
     better (each distinct doc is shingled once, not once per pair side)."""
     pairs = _spread(pairs)
     t = clips.select("clip_id", "transcript")
@@ -108,8 +171,7 @@ def _verify_text_join(pairs: DataFrame, clips: DataFrame, cfg: DedupConfig) -> D
 def _collect_shingle_csr(clips: DataFrame, cfg: DedupConfig):
     """Driver-side: (ids, flat, offsets) CSR of every clip's shingle set,
     computed by ONE distributed kernel pass over the slim (clip_id,
-    transcript) projection and collected via ``toArrow`` (flat buffer views,
-    no per-row Python conversion)."""
+    transcript) projection."""
     from pyspark.sql.types import ArrayType, LongType
 
     k, seed = cfg.k_shingle, cfg.seed
@@ -134,12 +196,8 @@ def _collect_shingle_csr(clips: DataFrame, cfg: DedupConfig):
                 }
             )
 
-    tbl = clips.select("clip_id", "transcript").mapInPandas(gen, schema=schema).toArrow()
-    ids = tbl.column("clip_id").to_numpy(zero_copy_only=False)
-    col = tbl.column("hs").combine_chunks()
-    flat = col.values.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    offsets = col.offsets.to_numpy().astype(np.int64, copy=False)
-    return ids, flat, offsets
+    shingled = clips.select("clip_id", "transcript").mapInPandas(gen, schema=schema)
+    return _collect_lists(shingled, "hs", np.int64)
 
 
 def verify_text_pairs(
@@ -149,29 +207,20 @@ def verify_text_pairs(
 ) -> DataFrame:
     """(a, b, source) + clips → verified (a, b, source, jaccard) at threshold.
 
-    Plan choice (r6, mirrors the audio verify's gating):
+    Plan choice (``use_lookup``, shared with the audio verify and the
+    containment prefilter): the join plan for a pair frame under the
+    small-join gate or a shingle CSR (``n_rows × CSR_ROW_BYTES``) over the
+    driver collect budget; else the lookup plan. There each distinct doc is
+    shingled ONCE by a distributed kernel pass, the CSR is shipped as
+    memmapped files (``_publish_lookup``), and the pair UDF probes it with an
+    exact size-bound prefilter — no transcript joins, no per-pair
+    re-shingling (measured ~80× redundant at 50k docs / 2M pairs).
+    ``n_rows`` is the clip count when the caller knows it; else one
+    ``clips.count()`` runs.
 
-    - small pair frames (``n_candidates`` < ``cfg.verify_small_join_max_pairs``)
-      keep the plain join plan — the lookup's fixed costs (one clips scan,
-      driver collect, addFile ship) don't pay for themselves;
-    - else, while the corpus fits ``cfg.text_collect_max_rows``, each distinct
-      doc is shingled ONCE by a distributed kernel pass, the CSR is shipped
-      via ``sc.addFile`` and memmapped by workers, and the pair UDF probes it
-      with an exact size-bound prefilter — no transcript joins, no per-pair
-      re-shingling (measured ~80× redundant at 50k docs / 2M pairs);
-    - beyond the ceiling: join plan (the 10¹²-clip path).
-
-    All plans are row-identical (parity-tested): same intersection counts,
+    Both plans are row-identical (parity-tested): same intersection counts,
     same float64 division, same inner-join id semantics."""
-    small = (
-        n_candidates is not None
-        and n_candidates < cfg.verify_small_join_max_pairs
-    )
-    if small:
-        return _verify_text_join(pairs, clips, cfg)
-    if n_rows is None:
-        n_rows = clips.count()
-    if n_rows > cfg.text_collect_max_rows:
+    if not use_lookup(clips, CSR_ROW_BYTES, cfg, n_rows=n_rows, n_candidates=n_candidates):
         return _verify_text_join(pairs, clips, cfg)
 
     from srpr_lsh_spark.kernels.text import (
@@ -203,19 +252,10 @@ def verify_text_pairs(
 
 def _collect_fp_matrix(signatures: DataFrame, dim: int) -> "tuple[np.ndarray, np.ndarray]":
     """Driver-side: the slim ``(clip_id, fp)`` projection as (ids, (n, d)
-    float32) — via ``toArrow`` + a flat offsets/values view of the list
-    column (no 200k-iteration Python conversion loop; the collect is the one
-    driver-serial step of the lookup phase-1 plan, so its constant
-    matters). Rows with missing/short fp stay zero (= silence, never links)."""
-    tbl = signatures.select("clip_id", "fp").toArrow()
-    ids = tbl.column("clip_id").to_numpy(zero_copy_only=False)
-    col = tbl.column("fp").combine_chunks()
-    values = col.values.to_numpy(zero_copy_only=False).astype(np.float32, copy=False)
-    offsets = col.offsets.to_numpy()
-    n = len(ids)
-    fps = np.zeros((n, dim), dtype=np.float32)
-    lens = np.diff(offsets)
-    full = np.flatnonzero(lens == dim)
+    float32). Rows with missing/short fp stay zero (= silence, never links)."""
+    ids, values, offsets = _collect_lists(signatures, "fp", np.float32)
+    fps = np.zeros((len(ids), dim), dtype=np.float32)
+    full = np.flatnonzero(np.diff(offsets) == dim)
     if full.size:
         gather = (offsets[:-1][full][:, None] + np.arange(dim)[None, :]).ravel()
         fps[full] = values[gather].reshape(-1, dim)
@@ -240,8 +280,8 @@ def _publish_lookup(sc, kind: str, save) -> "tuple[str, tuple]":
     per-session temp dir is shutdown-cleaned, so sources are parked under
     ``sc._temp_dir/<kind>``; on top of that, each new run deletes the
     PREVIOUS run's sources of the same kind, so a long-lived serving session
-    holds at most one lookup per kind (~up to 0.9 GB of fp lookup at the
-    collect ceiling) instead of one per dedup run (r5 ADVICE #1). Old files
+    holds at most one lookup per kind (at most the collect budget, 1 GiB by
+    default) instead of one per dedup run (r5 ADVICE #1). Old files
     already opened by workers are never re-read — no task references the old
     prefix once the new lookup exists. The mkdtemp fallback (no session temp
     dir) is removed at exit.
@@ -353,11 +393,12 @@ def _phase1_cosine_lookup(
 def _phase1_cosine_join(
     pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
-    """Join-based phase 1 — the beyond-collect-scale path (fingerprint side
-    too big to collect): two equi-joins attach fp rows, the dot runs JVM-side
-    in whole-stage codegen. At 10¹² clips these become sort-merge joins on a
-    bucketed signatures table; below ``fp_collect_max_rows`` the lookup
-    kernel above is strictly better (one build vs 3+, NOTES.md round-3 saga).
+    """Join-based phase 1 — the small-pair and beyond-budget path
+    (fingerprint side too big to collect): two equi-joins attach fp rows, the
+    dot runs JVM-side in whole-stage codegen. At 10¹² clips these become
+    sort-merge joins on a bucketed signatures table; within the collect
+    budget the lookup kernel above is strictly better on large pair frames
+    (one build vs 3+, NOTES.md round-3 saga).
     Fingerprints are L2-normalized at creation; a zero vector (silence) gives
     dot = 0.0 — NOT null — so such pairs are dropped only because
     cosine_threshold > 0. That positive threshold is the zero-magnitude guard
@@ -389,7 +430,7 @@ def verify_audio_pairs(
     Three phases, each shrinking the set before the next gets more expensive:
     1. fingerprint cosine — int8-quantized prefilter + exact float64 dot in
        one ``mapInPandas`` against a single memmapped lookup (see
-       ``_phase1_cosine_lookup``; join fallback above the collect ceiling) —
+       ``_phase1_cosine_lookup``; join fallback beyond the collect budget) —
        kills the giant hot-band star pairs and the mass of near-parallel
        non-duplicates;
     2. decimated-PCM sketch SNR from signatures, survivors only — kills
@@ -402,18 +443,14 @@ def verify_audio_pairs(
 
     ``n_candidates`` / ``n_signatures`` are driver-known row counts (the
     pipeline threads them in from the Warehouse stage manifests — parquet
-    footer metadata, zero Spark jobs). They pick the phase-1 plan:
-
-    - ``n_candidates`` below ``cfg.verify_small_join_max_pairs`` → the plain
-      JVM-join plan. The lookup ladder's fixed costs (driver collect,
-      lookup file write, extra spread shuffles) are a measured win at ≥200k
-      clips but pure overhead at bench-small corpora — the r4 sf0.1
-      regression (VERDICT r4 #2). Both plans are parity-tested equal.
-    - else lookup ladder while ``n_signatures`` fits the collect ceiling
-      (``cfg.fp_collect_max_rows``), join plan beyond it (the 10¹²-clip
-      path). When the counts aren't supplied (standalone use), one
-      ``signatures.count()`` decides — inside the pipeline that action never
-      fires (VERDICT r4 "what's wrong" #1).
+    footer metadata, zero Spark jobs). ``use_lookup`` picks the phase-1 plan
+    from them: the plain JVM-join plan below the small-join gate (the r4
+    sf0.1 regression, VERDICT r4 #2) or when the fp lookup
+    (``n_signatures × (4·fingerprint_dim + ID_BYTES)``) exceeds the driver
+    collect budget; else the lookup. Both plans are parity-tested equal.
+    Without ``n_signatures`` (standalone use), one ``signatures.count()``
+    decides — inside the pipeline that action never fires (VERDICT r4
+    "what's wrong" #1).
 
     ``stats``, when provided, receives Spark accumulators ``pairs_in`` /
     ``int8_pass`` (read their ``.value`` after an action) — the
@@ -423,21 +460,12 @@ def verify_audio_pairs(
     """
     sketch_thr = cfg.snr_db_threshold - cfg.sketch_margin_db
 
-    small = (
-        n_candidates is not None
-        and n_candidates < cfg.verify_small_join_max_pairs
-    )
-    if small:
-        phase1 = _phase1_cosine_join(pairs, signatures, cfg)
+    fp_row_bytes = 4 * cfg.fingerprint_dim + ID_BYTES
+    if use_lookup(signatures, fp_row_bytes, cfg, n_rows=n_signatures,
+                  n_candidates=n_candidates):
+        phase1 = _phase1_cosine_lookup(_spread(pairs), signatures, cfg, stats=stats)
     else:
-        if n_signatures is None:
-            n_signatures = signatures.count()
-        if n_signatures <= cfg.fp_collect_max_rows:
-            phase1 = _phase1_cosine_lookup(
-                _spread(pairs), signatures, cfg, stats=stats
-            )
-        else:
-            phase1 = _phase1_cosine_join(pairs, signatures, cfg)
+        phase1 = _phase1_cosine_join(pairs, signatures, cfg)
     # survivors are tiny (≈ true-dup count); materialize once EAGERLY — the
     # phase-2 shrink semi-joins and the phase-3 broadcast builds reference
     # this frame from CONCURRENT driver threads (BroadcastExchange builds run

@@ -15,8 +15,8 @@ from srpr_lsh_spark.config import DedupConfig
 from srpr_lsh_spark.operators.ann import lsh_topk
 from srpr_lsh_spark.operators.banding import (
     SOURCE_MINHASH,
+    combined_candidates,
     explode_bands,
-    space_candidates,
 )
 from srpr_lsh_spark.operators.signatures import compute_signatures
 from srpr_lsh_spark.operators.verify import verify_text_pairs
@@ -82,7 +82,7 @@ def near_dup_pairs_documents(
     # and identical subplans inside the single job are covered by
     # ReusedExchange — one fewer eager driver action per call.
     sigs = compute_signatures(clips, vcfg).localCheckpoint(eager=True)
-    cands = space_candidates(sigs, vcfg, SOURCE_MINHASH)
+    cands = combined_candidates(sigs, vcfg, sources=(SOURCE_MINHASH,))
     # n_rows from the (already materialized) signature blocks — a metadata-
     # cheap count that lets verify pick the shingle-lookup plan (r6) without
     # scanning documents again

@@ -202,58 +202,6 @@ class TestTrainers:
         assert _pairwise_acc(m, rows, use_cos=True) >= 0.85
 
 
-class TestBlockedTrainer:
-    def test_blocked_matches_driver_resident(self, spark, planted, monkeypatch):
-        """The DataFrame-resident (block-partitioned) trainer computes the
-        SAME ascent as the driver-resident path: same gradient field, same
-        compounded decay, same epoch synchronization — pinned by giving both
-        paths the identical id-seeded init and comparing factors after 3
-        epochs (equal up to float summation order)."""
-        import srpr_lsh_spark.ml.trainer as T
-
-        trip, rows = planted
-        tp = np.array(rows)
-        user_ids = np.unique(tp[:, 0])
-        item_ids = np.unique(tp[:, 1:])
-
-        def seeded_by_ids(n, d, seed, offset=0):
-            ids = user_ids if offset == 0 else item_ids
-            assert n == ids.size
-            return T.id_seeded_factors(ids, d, seed, offset)
-
-        monkeypatch.setattr(T, "init_factors", seeded_by_ids)
-        md = T.train_bpr(spark, trip, d=4, epochs=3, learning_rate=0.05, lam=0.01)
-        mb = T.train_bpr_blocked(
-            spark, trip, d=4, epochs=3, learning_rate=0.05, lam=0.01
-        ).to_local()
-        np.testing.assert_array_equal(md.user_ids, mb.user_ids)
-        np.testing.assert_array_equal(md.item_ids, mb.item_ids)
-        np.testing.assert_allclose(md.U, mb.U, rtol=1e-8, atol=1e-10)
-        np.testing.assert_allclose(md.V, mb.V, rtol=1e-8, atol=1e-10)
-        for hd, hb in zip(md.history, mb.history):
-            assert hd["n_triplets"] == hb["n_triplets"]
-            assert hd["loglik"] == pytest.approx(hb["loglik"], rel=1e-9)
-
-    def test_blocked_needs_no_dense_remap(self, spark):
-        """Entity ids way beyond any dense-array comfort (~10¹⁵): the blocked
-        path keys factors by ORIGINAL id — no remap, no driver-sized
-        allocation anywhere. One epoch must produce finite loglik and one
-        factor row per entity."""
-        from srpr_lsh_spark.ml.trainer import train_bpr_blocked
-
-        base = 10**15
-        rows = [(base + u, base + 100 + (t % 7), base + 200 + t % 5)
-                for u in range(6) for t in range(10)]
-        trip = spark.createDataFrame(rows, ["user_id", "pos_item", "neg_item"])
-        m = train_bpr_blocked(spark, trip, d=4, epochs=1,
-                              learning_rate=0.05, lam=0.01)
-        assert np.isfinite(m.history[-1]["loglik"])
-        assert m.factors_u.count() == 6
-        assert m.factors_v.count() == 12
-        ids = [r["id"] for r in m.factors_u.select("id").collect()]
-        assert min(ids) >= base
-
-
 class TestAngleGeometrySweep:
     def test_srpr_beats_bpr_on_angle_geometry(self, spark):
         """The claim the reference repo exists to demonstrate (main.cpp:122-166):

@@ -195,16 +195,20 @@ def test_g711_reencode_dedups_against_pcm_original(spark, tmp_path):
     assert got["other"] != got["orig"]
 
 
-def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path):
-    """The two phase-1 plans — the memmapped fp lookup (below
-    fp_collect_max_rows) and the join-based beyond-collect-scale fallback —
-    must verify the SAME pairs with the SAME cosines: the int8 prefilter is
-    sound (margin bound), so plan choice can never change results."""
-    import dataclasses
+def _force_join_plans(monkeypatch):
+    """Shrink the driver collect budget to 0 bytes: every lookup-vs-join
+    choice (``use_lookup``) then takes its beyond-budget join plan."""
+    from srpr_lsh_spark.operators import verify
 
-    from pyspark.sql import functions as F
+    monkeypatch.setattr(verify, "collect_budget_bytes", lambda sc: 0)
 
-    from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH, space_candidates
+
+def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path, monkeypatch):
+    """The two phase-1 plans — the memmapped fp lookup (within the driver
+    collect budget) and the join-based beyond-budget fallback — must verify
+    the SAME pairs with the SAME cosines: the int8 prefilter is sound (margin
+    bound), so plan choice can never change results."""
+    from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH, combined_candidates
     from srpr_lsh_spark.operators.signatures import compute_signatures
     from srpr_lsh_spark.operators.verify import verify_audio_pairs
 
@@ -215,7 +219,8 @@ def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path):
     )
     cfg = CFG
     sigs = compute_signatures(clips, cfg).localCheckpoint(eager=True)
-    cands = space_candidates(sigs, cfg, SOURCE_SIMHASH).localCheckpoint(eager=True)
+    cands = combined_candidates(
+        sigs, cfg, sources=(SOURCE_SIMHASH,)).localCheckpoint(eager=True)
 
     def rows(df):
         return sorted(
@@ -223,26 +228,27 @@ def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path):
             for r in df.collect()
         )
 
-    got_lookup = rows(verify_audio_pairs(cands, clips, sigs, cfg))
-    cfg_join = dataclasses.replace(cfg, fp_collect_max_rows=0)  # force fallback
-    got_join = rows(verify_audio_pairs(cands, clips, sigs, cfg_join))
+    stats_lookup, stats_join = {}, {}
+    got_lookup = rows(verify_audio_pairs(cands, clips, sigs, cfg, stats=stats_lookup))
+    _force_join_plans(monkeypatch)
+    got_join = rows(verify_audio_pairs(cands, clips, sigs, cfg, stats=stats_join))
     assert got_lookup == got_join
     assert len(got_lookup) > 0
-    # plan knobs must not invalidate checkpoints (layout fields, not semantics)
-    assert cfg.config_hash() == cfg_join.config_hash()
+    # only the lookup plan records its accumulators: each call took its plan
+    assert "pairs_in" in stats_lookup and not stats_join
 
 
-def test_text_lookup_plan_matches_join_plan(spark, tmp_path):
+def test_text_lookup_plan_matches_join_plan(spark, tmp_path, monkeypatch):
     """The two text-verify plans — memmapped shingle-CSR lookup (r6) and the
     transcript-join fallback — must verify the SAME pairs with the SAME
     jaccard values: the size-bound prefilter is exact (J ≤ min/max), so plan
     choice can never change results. Also pins the gating: a small candidate
-    count or an over-ceiling corpus selects the join plan."""
-    import dataclasses
-
-    from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, space_candidates
+    count or an over-budget CSR selects the join plan."""
+    from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, combined_candidates
     from srpr_lsh_spark.operators.signatures import compute_signatures
-    from srpr_lsh_spark.operators.verify import _verify_text_join, verify_text_pairs
+    from srpr_lsh_spark.operators.verify import (
+        CSR_ROW_BYTES, _verify_text_join, use_lookup, verify_text_pairs,
+    )
 
     clips, _ = synthesize_clips(
         spark,
@@ -252,34 +258,124 @@ def test_text_lookup_plan_matches_join_plan(spark, tmp_path):
     cfg = CFG
     sigs = compute_signatures(clips, cfg).localCheckpoint(eager=True)
     n = sigs.count()
-    cands = space_candidates(sigs, cfg, SOURCE_MINHASH).localCheckpoint(eager=True)
+    cands = combined_candidates(
+        sigs, cfg, sources=(SOURCE_MINHASH,)).localCheckpoint(eager=True)
+    gate = cfg.verify_small_join_max_pairs
 
     def rows(df):
         return sorted(
             (r["a"], r["b"], r["source"], r["jaccard"]) for r in df.collect()
         )
 
+    def lookup_taken(n_candidates):
+        return use_lookup(clips, CSR_ROW_BYTES, cfg, n_rows=n, n_candidates=n_candidates)
+
     got_join = rows(_verify_text_join(cands, clips, cfg))
     # n_candidates above the small-join gate → lookup plan
-    got_lookup = rows(
-        verify_text_pairs(
-            cands, clips, cfg,
-            n_candidates=cfg.verify_small_join_max_pairs + 1, n_rows=n,
-        )
-    )
+    assert lookup_taken(gate + 1) and not lookup_taken(gate - 1)
+    got_lookup = rows(verify_text_pairs(cands, clips, cfg, n_candidates=gate + 1, n_rows=n))
     assert got_lookup == got_join
     assert len(got_join) > 0
-    # over-ceiling corpus falls back to the join plan, same rows
-    cfg_big = dataclasses.replace(cfg, text_collect_max_rows=0)
-    got_fallback = rows(
-        verify_text_pairs(
-            cands, clips, cfg_big,
-            n_candidates=cfg.verify_small_join_max_pairs + 1, n_rows=n,
-        )
-    )
+    # an over-budget CSR falls back to the join plan, same rows
+    _force_join_plans(monkeypatch)
+    assert not lookup_taken(gate + 1)
+    got_fallback = rows(verify_text_pairs(cands, clips, cfg, n_candidates=gate + 1, n_rows=n))
     assert got_fallback == got_join
-    # the plan knob is a layout field: checkpoints stay valid across it
-    assert cfg.config_hash() == cfg_big.config_hash()
+
+
+def test_containment_prefilter_matches_fallback(spark, tmp_path, monkeypatch):
+    """The two containment candidate plans — the broadcast keep-set
+    prefilter with rarest-subset generation, and the join-everything
+    fallback taken when the keep-set exceeds the driver collect budget —
+    must emit the SAME (short, long) rows, with and without hot shingles
+    cut from the sketches."""
+    import dataclasses
+
+    from srpr_lsh_spark.operators.signatures import compute_signatures
+    from srpr_lsh_spark.operators.substring import containment_candidates
+
+    clips, _ = synthesize_clips(
+        spark,
+        SynthParams(n_clips=400, block_size=100, seed=13, min_dur_ms=300, max_dur_ms=600),
+        out_dir=str(tmp_path / "d"),
+    )
+    sigs = compute_signatures(clips, CFG).localCheckpoint(eager=True)
+    cfgs = [CFG, dataclasses.replace(CFG, hot_shingle_cap=4)]
+
+    def rows(cfg):
+        return sorted(map(tuple, containment_candidates(clips, sigs, cfg).collect()))
+
+    prefilter = [rows(cfg) for cfg in cfgs]
+    _force_join_plans(monkeypatch)
+    fallback = [rows(cfg) for cfg in cfgs]
+    assert prefilter == fallback
+    assert all(prefilter)
+
+
+_OVER_BUDGET_TEXT_VERIFY = """
+import json, sys
+from pyspark.sql import SparkSession
+from srpr_lsh_spark.config import DedupConfig
+from srpr_lsh_spark.operators.verify import verify_text_pairs
+
+data, limit, n_rows, out = sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4]
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.driver.maxResultSize", limit)
+         .config("spark.driver.memory", "1g")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.ui.enabled", "false").getOrCreate())
+cfg = DedupConfig(shuffle_partitions=8)
+clips = spark.read.parquet(data + "/clips_full").drop("cluster_id", "role")
+cands = spark.read.parquet(data + "/cands")
+got = verify_text_pairs(cands, clips, cfg,
+                        n_candidates=cfg.verify_small_join_max_pairs + 1, n_rows=n_rows)
+json.dump([list(r) for r in got.collect()], open(out, "w"))
+spark.stop()
+"""
+
+
+def test_text_verify_over_budget_takes_join_plan(spark, tmp_path):
+    """A shingle CSR larger than ``spark.driver.maxResultSize`` must take the
+    join plan, not abort the job on the driver result-size check. Runs in a
+    fresh session whose limit sits below the corpus's CSR bytes but above
+    every other collect or broadcast of the call (the transcript side of the
+    join plan and the verified rows)."""
+    import subprocess
+    import sys
+
+    from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, combined_candidates
+    from srpr_lsh_spark.operators.signatures import compute_signatures
+    from srpr_lsh_spark.operators.verify import CSR_ROW_BYTES, _verify_text_join
+
+    data = tmp_path / "d"
+    clips, _ = synthesize_clips(
+        spark,
+        SynthParams(n_clips=400, block_size=100, seed=11, min_dur_ms=300, max_dur_ms=600),
+        out_dir=str(data),
+    )
+    sigs = compute_signatures(clips, CFG).localCheckpoint(eager=True)
+    n = sigs.count()
+    combined_candidates(sigs, CFG, sources=(SOURCE_MINHASH,)).write.parquet(
+        str(data / "cands"))
+    cands = spark.read.parquet(str(data / "cands"))
+    want = sorted((r["a"], r["b"], r["source"], r["jaccard"])
+                  for r in _verify_text_join(cands, clips, CFG).collect())
+    assert want
+
+    limit = 256 << 10
+    assert n * CSR_ROW_BYTES > limit
+    out = tmp_path / "rows.json"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run(
+        [sys.executable, "-c", _OVER_BUDGET_TEXT_VERIFY, str(data), str(limit), str(n),
+         str(out)],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = sorted(tuple(r) for r in json.load(open(out)))
+    assert got == want
 
 
 def test_chunked_signatures_partition_resume(spark, tmp_path):
@@ -388,9 +484,10 @@ def test_chunked_signatures_rejects_transformed_input(spark, tmp_path):
 
 def test_combined_candidates_row_identical_to_per_space(spark, tmp_path):
     """The r5 one-pass bucket join over both LSH spaces must emit EXACTLY the
-    rows of the per-space union (the band-id key spaces are disjoint)."""
+    rows of the union of the one-space passes (the band-id key spaces are
+    disjoint)."""
     from srpr_lsh_spark.operators.banding import (
-        SOURCE_MINHASH, SOURCE_SIMHASH, combined_candidates, space_candidates,
+        SOURCE_MINHASH, SOURCE_SIMHASH, combined_candidates,
     )
     from srpr_lsh_spark.operators.signatures import compute_signatures
 
@@ -400,8 +497,8 @@ def test_combined_candidates_row_identical_to_per_space(spark, tmp_path):
     sigs = compute_signatures(clips, CFG).localCheckpoint(eager=True)
     rows = lambda df: sorted(map(tuple, df.collect()))
     want = rows(
-        space_candidates(sigs, CFG, SOURCE_MINHASH).unionByName(
-            space_candidates(sigs, CFG, SOURCE_SIMHASH))
+        combined_candidates(sigs, CFG, sources=(SOURCE_MINHASH,)).unionByName(
+            combined_candidates(sigs, CFG, sources=(SOURCE_SIMHASH,)))
     )
     assert rows(combined_candidates(sigs, CFG)) == want
 

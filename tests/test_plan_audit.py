@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from srpr_lsh_spark.config import DedupConfig
-from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, SOURCE_SIMHASH, space_candidates
+from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH, combined_candidates
 from srpr_lsh_spark.operators.signatures import compute_signatures
 from srpr_lsh_spark.plans.pipeline import run_dedup
 from srpr_lsh_spark.sources.synth import SynthParams, synthesize_clips
@@ -44,9 +44,7 @@ def test_candidates_exchanges_carry_no_audio_bytes(corpus):
     at the clips scan (bytes included) and must decode in the scan stage."""
     clips, _ = corpus
     sigs = compute_signatures(clips, CFG)
-    cands = space_candidates(sigs, CFG, SOURCE_MINHASH).unionByName(
-        space_candidates(sigs, CFG, SOURCE_SIMHASH)
-    )
+    cands = combined_candidates(sigs, CFG)
     blocks = re.split(r"\n\n", _formatted(cands))
     exch = [b for b in blocks
             if re.match(r"\(\d+\) (Exchange|BroadcastExchange)", b.strip())]

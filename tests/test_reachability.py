@@ -1,16 +1,47 @@
-"""Every ``srpr_lsh_spark`` module is reached from an entry point (Spark-free).
+"""Every ``srpr_lsh_spark`` module and top-level function or class is reached
+from an entry point (Spark-free).
 
-Walks the ``import`` / ``from … import`` statements (function-local ones
-included) of the driver entry, the bench CLIs, ``tools/*.py`` and
-``perfbench/*.py``, then follows package imports transitively. A module that
-no entry point reaches is dead weight: delete it, or wire it into a stage,
-declared query or bench that exercises it."""
+Module level: walks the ``import`` / ``from … import`` statements
+(function-local ones included) of the driver entry, the bench CLIs,
+``tools/*.py`` and ``perfbench/*.py``, then follows package imports
+transitively.
+
+Function level: a top-level ``def`` or ``class`` of a reached module is
+reached when its name appears as an ast ``Name`` or ``Attribute`` in an entry
+point, in the module-level code of a reached module, or inside a definition
+that is itself reached. Matching is by bare name, so a name reached anywhere
+covers every definition of it.
+
+Dead weight either way: delete it, or wire it into a stage, declared query or
+bench that exercises it. ``PINNED`` lists the exceptions."""
 
 import ast
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "srpr_lsh_spark"
+
+# Reference re-expressions no entry point calls but tests pin; each is also a
+# root of the function-level walk, so what it calls counts as reached.
+PINNED = {
+    # G.711 encoder: builds the μ-law/A-law fixtures the decoder is tested on
+    "srpr_lsh_spark.kernels.audio.encode_g711_wav",
+    # scalar SNR: the oracle batch_pair_snr_db is tested against
+    "srpr_lsh_spark.kernels.audio.pair_snr_db",
+    # scalar Jaccard: the oracle batch_jaccard is tested against
+    "srpr_lsh_spark.kernels.text.jaccard",
+    # Eq. 9 on raw vectors (SRPRModel.h:149-156), pinned by hand values
+    "srpr_lsh_spark.kernels.srpr_math.p_srp",
+    # the reference's ratings / triplets CSV inputs (DataManager.h)
+    "srpr_lsh_spark.sources.readers.read_ratings_csv",
+    "srpr_lsh_spark.sources.readers.read_triplets_csv",
+    # the reference's binary vector cache (DataManager.h:50), round-trip tested
+    "srpr_lsh_spark.ml.vectors_io.save_vectors",
+    "srpr_lsh_spark.ml.vectors_io.load_vectors",
+    # the reference's bits sweep and its speedup table (main.cpp:122-166)
+    "srpr_lsh_spark.plans.sweep.sweep_bits",
+    "srpr_lsh_spark.plans.sweep.speedup_csv",
+}
 
 
 def _entry_points() -> "list[Path]":
@@ -81,3 +112,60 @@ def reached_modules() -> "set[str]":
 def test_every_package_module_is_reached():
     unreached = sorted(_package_modules() - reached_modules())
     assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+def _names(node: ast.AST) -> "set[str]":
+    """Every ``Name`` id and ``Attribute`` attr under ``node``."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def unreached_definitions() -> "set[str]":
+    """Dotted names of top-level definitions in reached modules that no
+    entry point reaches by name (``PINNED`` entries count as reached)."""
+    defs: "dict[str, list[tuple[str, ast.AST]]]" = {}
+    todo: "set[str]" = set()
+    for p in _entry_points():
+        todo |= _names(ast.parse(p.read_text(), str(p)))
+    for mod in reached_modules():
+        path = _module_path(mod)
+        for node in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(node, _DEF):
+                defs.setdefault(node.name, []).append((mod, node))
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                todo |= _names(node)  # module-level code runs on import
+    todo |= {q.rsplit(".", 1)[1] for q in PINNED}
+    seen: "set[str]" = set()
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for _, node in defs.get(name, ()):
+            todo |= _names(node) - seen
+    return {f"{mod}.{name}" for name, found in defs.items() if name not in seen
+            for mod, _ in found}
+
+
+def test_every_package_definition_is_reached():
+    unreached = sorted(unreached_definitions())
+    assert not unreached, f"definitions no entry point reaches: {unreached}"
+
+
+def test_pinned_definitions_exist():
+    """A stale ``PINNED`` entry would hide nothing but still read as a
+    reason; keep the list to definitions that exist."""
+    have = set()
+    for mod in reached_modules():
+        path = _module_path(mod)
+        have |= {f"{mod}.{n.name}" for n in ast.parse(path.read_text()).body
+                 if isinstance(n, _DEF)}
+    assert PINNED <= have, sorted(PINNED - have)
