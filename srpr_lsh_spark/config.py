@@ -79,9 +79,10 @@ class DedupConfig:
     # lookup file write, spread shuffles) only pay for themselves on big
     # candidate sets (measured: win at 200k clips, 2.4× loss at 20k —
     # VERDICT r4 #2). Both plans are parity-tested equal. Above it, a lookup
-    # (and the containment keep-set broadcast) runs while its estimated bytes
-    # fit spark.driver.maxResultSize, else the join plan — a Spark setting,
-    # not a field (operators/verify.py::use_lookup).
+    # runs while its estimated bytes fit spark.driver.maxResultSize, else the
+    # join plan — a Spark setting, not a field (operators/verify.py::
+    # use_lookup). The same bound sets containment's broadcast hint on its
+    # sketch-hash union (n_signatures × bottom_k hashes).
     verify_small_join_max_pairs: int = 400_000
     snr_db_threshold: float = 30.0   # decoded-PCM pair SNR acceptance (input_hint)
     # verify phase-3 decodes BOTH sides of each pair to float64 PCM; a full
@@ -123,6 +124,9 @@ class DedupConfig:
     # --- determinism ---
     seed: int = 42              # reference seed discipline: lsh.h:80, MatrixFactorization.h:44
     # --- layout ---
+    # sizes only harness sessions (bench.py, perfbench, tests); run_dedup
+    # never reads it — a run's shuffle width is the session's
+    # spark.sql.shuffle.partitions
     shuffle_partitions: int = 32
     cc_max_iters: int = 25
     # input split size for the decode/signature scan: audio rows are wide, the

@@ -148,3 +148,33 @@ def compute_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
     # Scan parallelism for this CPU-heavy stage is controlled by the input
     # split size instead (run_dedup pins spark.sql.files.maxPartitionBytes).
     return clips.select(*cols).mapInPandas(gen, schema=signatures_schema())
+
+
+def shingle_sets(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """clips → (clip_id, hs): each transcript's sorted-unique k-shingle
+    hashes, from ONE kernel pass over the slim (clip_id, transcript)
+    projection. The per-clip shingle frame behind both the containment
+    index and the text-verify shingle CSR."""
+    k, seed = cfg.k_shingle, cfg.seed
+    schema = StructType(
+        [
+            StructField("clip_id", StringType(), False),
+            StructField("hs", ArrayType(LongType(), False), False),
+        ]
+    )
+
+    def gen(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            texts = normalize_transcript(pdf["transcript"].tolist())
+            flat, off = shingle_hashes(texts, k=k, seed=seed)
+            flat_i = flat.view(np.int64)
+            yield pd.DataFrame(
+                {
+                    "clip_id": pdf["clip_id"].astype(str),
+                    "hs": [flat_i[off[i] : off[i + 1]] for i in range(len(texts))],
+                }
+            )
+
+    return clips.select("clip_id", "transcript").mapInPandas(gen, schema=schema)

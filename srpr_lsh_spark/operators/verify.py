@@ -22,7 +22,6 @@ import os
 import shutil
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
@@ -30,6 +29,7 @@ from srpr_lsh_spark.config import DedupConfig
 from srpr_lsh_spark.kernels.audio import batch_pair_snr_db, decode_pcm16_wav
 from srpr_lsh_spark.kernels.hashing import shingle_hashes
 from srpr_lsh_spark.kernels.text import batch_jaccard, normalize_transcript
+from srpr_lsh_spark.operators.signatures import shingle_sets
 
 
 def _attach(
@@ -94,9 +94,9 @@ def use_lookup(
     n_rows: "int | None" = None,
     n_candidates: "int | None" = None,
 ) -> bool:
-    """The lookup-vs-join choice of text verify, audio verify and the
-    containment prefilter: True collects a structure of ``rows`` to the
-    driver (lookup plan), False keeps the join plan.
+    """The lookup-vs-join choice of text verify and audio verify, and the
+    broadcast hint on containment's sketch-hash union: True collects or
+    broadcasts a structure of ``rows`` (lookup plan), False keeps the join.
 
     - ``n_candidates`` below ``cfg.verify_small_join_max_pairs`` → join: the
       lookup's fixed costs (one scan, driver collect, file ship) don't pay
@@ -107,8 +107,8 @@ def use_lookup(
       driver-known count (warehouse manifest); when ``None``, one
       ``rows.count()`` decides.
 
-    Every plan pair is parity-tested row-identical, so the choice moves cost,
-    never results."""
+    Every verify plan pair is parity-tested row-identical, and a hint
+    changes no rows, so the choice moves cost, never results."""
     if n_candidates is not None and n_candidates < cfg.verify_small_join_max_pairs:
         return False
     if n_rows is None:
@@ -168,38 +168,6 @@ def _verify_text_join(pairs: DataFrame, clips: DataFrame, cfg: DedupConfig) -> D
     return withz.mapInPandas(gen, schema=TEXT_SCHEMA)
 
 
-def _collect_shingle_csr(clips: DataFrame, cfg: DedupConfig):
-    """Driver-side: (ids, flat, offsets) CSR of every clip's shingle set,
-    computed by ONE distributed kernel pass over the slim (clip_id,
-    transcript) projection."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    k, seed = cfg.k_shingle, cfg.seed
-    schema = StructType(
-        [
-            StructField("clip_id", StringType(), False),
-            StructField("hs", ArrayType(LongType(), False), False),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            texts = normalize_transcript(pdf["transcript"].tolist())
-            flat, off = shingle_hashes(texts, k=k, seed=seed)
-            flat_i = flat.view(np.int64)
-            yield pd.DataFrame(
-                {
-                    "clip_id": pdf["clip_id"].astype(str),
-                    "hs": [flat_i[off[i] : off[i + 1]] for i in range(len(texts))],
-                }
-            )
-
-    shingled = clips.select("clip_id", "transcript").mapInPandas(gen, schema=schema)
-    return _collect_lists(shingled, "hs", np.int64)
-
-
 def verify_text_pairs(
     pairs: DataFrame, clips: DataFrame, cfg: DedupConfig,
     n_candidates: "int | None" = None,
@@ -207,13 +175,13 @@ def verify_text_pairs(
 ) -> DataFrame:
     """(a, b, source) + clips → verified (a, b, source, jaccard) at threshold.
 
-    Plan choice (``use_lookup``, shared with the audio verify and the
-    containment prefilter): the join plan for a pair frame under the
-    small-join gate or a shingle CSR (``n_rows × CSR_ROW_BYTES``) over the
-    driver collect budget; else the lookup plan. There each distinct doc is
-    shingled ONCE by a distributed kernel pass, the CSR is shipped as
-    memmapped files (``_publish_lookup``), and the pair UDF probes it with an
-    exact size-bound prefilter — no transcript joins, no per-pair
+    Plan choice (``use_lookup``, shared with the audio verify): the join
+    plan for a pair frame under the small-join gate or a shingle CSR
+    (``n_rows × CSR_ROW_BYTES``) over the driver collect budget; else the
+    lookup plan. There each distinct doc is shingled ONCE by a distributed
+    kernel pass (``shingle_sets``), the CSR is shipped as memmapped files
+    (``_publish_lookup``), and the pair UDF probes it with an exact
+    size-bound prefilter — no transcript joins, no per-pair
     re-shingling (measured ~80× redundant at 50k docs / 2M pairs).
     ``n_rows`` is the clip count when the caller knows it; else one
     ``clips.count()`` runs.
@@ -229,7 +197,7 @@ def verify_text_pairs(
         save_shingle_lookup,
     )
 
-    ids, flat, offsets = _collect_shingle_csr(clips, cfg)
+    ids, flat, offsets = _collect_lists(shingle_sets(clips, cfg), "hs", np.int64)
     prefix, token = _publish_lookup(
         pairs.sparkSession.sparkContext, "txlk",
         lambda d: save_shingle_lookup(ids, flat, offsets, out_dir=d),

@@ -183,20 +183,26 @@ def _run_dedup(
     out["signatures"] = sigs
     if stop_after == "signatures":
         return out
+    # stage row counts from the warehouse manifests (parquet footer metadata,
+    # recorded at write time) — containment and verify size their plans from
+    # these with ZERO extra driver actions (VERDICT r4 "what's wrong" #1: a
+    # signatures.count() was one more serial job inside a stage)
+    _m_sig = wh.manifest("signatures")
+    n_sigs = _m_sig.get("rows") if _m_sig else None
 
     def build_candidates() -> DataFrame:
         # both LSH spaces in ONE bucket-join pass (row-identical to the
         # per-space union, pytest-pinned; halves the stage's shuffle count).
         # The two subgraphs' eager prologues (id-map build jobs / containment
-        # kernel checkpoints + gate count) are independent — build them from
-        # TWO driver threads so their jobs overlap and backfill each other's
-        # stage tails (guide §2.6) instead of running as a serial prologue
-        # chain. Same frames, same union, same rows.
+        # index checkpoint) are independent — build them from TWO driver
+        # threads so their jobs overlap and backfill each other's stage tails
+        # (guide §2.6) instead of running as a serial prologue chain. Same
+        # frames, same union, same rows.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_lsh = pool.submit(combined_candidates, sigs, cfg)
-            f_sub = pool.submit(containment_candidates, clips, sigs, cfg)
+            f_sub = pool.submit(containment_candidates, clips, sigs, cfg, n_sigs)
             lsh = f_lsh.result()
             sub = f_sub.result().select(
                 F.col("short").alias("a"), F.col("long").alias("b"),
@@ -211,13 +217,7 @@ def _run_dedup(
         return out
 
     audio_stats: dict = {}
-    # stage row counts from the warehouse manifests (parquet footer metadata,
-    # recorded at write time) — verify picks its phase-1 plan from these with
-    # ZERO extra driver actions (VERDICT r4 "what's wrong" #1: the old
-    # signatures.count() was one more serial job inside the stage)
-    _m_sig = wh.manifest("signatures")
     _m_cand = wh.manifest("candidates")
-    n_sigs = _m_sig.get("rows") if _m_sig else None
     n_cands = _m_cand.get("rows") if _m_cand else None
 
     def build_verified() -> DataFrame:

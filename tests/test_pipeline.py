@@ -283,12 +283,50 @@ def test_text_lookup_plan_matches_join_plan(spark, tmp_path, monkeypatch):
     assert got_fallback == got_join
 
 
-def test_containment_prefilter_matches_fallback(spark, tmp_path, monkeypatch):
-    """The two containment candidate plans — the broadcast keep-set
-    prefilter with rarest-subset generation, and the join-everything
-    fallback taken when the keep-set exceeds the driver collect budget —
-    must emit the SAME (short, long) rows, with and without hot shingles
-    cut from the sketches."""
+def _containment_reference(clip_rows, sig_rows, cfg) -> list:
+    """(short, long) containment candidates from the definition, in plain
+    Python: df over every clip's shingle set; the kept sketch S′ (sketch
+    hashes with df ≤ ``hot_shingle_cap``) of each short with at least
+    ``min_substr_shingles`` shingles; sk_n = |S′| ≥
+    ``containment_min_matches``; t = max(``containment_min_matches``,
+    ⌈0.8·sk_n⌉); short_len < long_len; |S′ ∩ shingles(long)| ≥ t."""
+    import math
+    from collections import Counter
+
+    from srpr_lsh_spark.kernels.hashing import shingle_hashes
+    from srpr_lsh_spark.kernels.text import normalize_transcript
+
+    ids = [r["clip_id"] for r in clip_rows]
+    flat, off = shingle_hashes(
+        normalize_transcript([r["transcript"] for r in clip_rows]),
+        k=cfg.k_shingle, seed=cfg.seed,
+    )
+    flat = flat.view("int64")
+    shingles = {c: set(flat[off[i]:off[i + 1]].tolist()) for i, c in enumerate(ids)}
+    df = Counter(h for hs in shingles.values() for h in hs)
+    tr_len = {r["clip_id"]: r["tr_len"] for r in sig_rows}
+    out = []
+    for r in sig_rows:
+        if r["n_shingles"] < cfg.min_substr_shingles:
+            continue
+        kept = {h for h in r["sketch"] if df[h] <= cfg.hot_shingle_cap}
+        sk_n = len(kept)
+        if sk_n < cfg.containment_min_matches:
+            continue
+        t = max(cfg.containment_min_matches, math.ceil(sk_n * 0.8))
+        short = r["clip_id"]
+        out += [
+            (short, long_) for long_, hs in shingles.items()
+            if tr_len[short] < tr_len[long_] and len(kept & hs) >= t
+        ]
+    return sorted(out)
+
+
+def test_containment_matches_bruteforce_reference(spark, tmp_path, monkeypatch):
+    """``containment_candidates`` emits exactly the candidate set its
+    definition gives (``_containment_reference``), with and without the
+    union's broadcast hint, with and without hot shingles cut from the
+    sketches."""
     import dataclasses
 
     from srpr_lsh_spark.operators.signatures import compute_signatures
@@ -301,15 +339,17 @@ def test_containment_prefilter_matches_fallback(spark, tmp_path, monkeypatch):
     )
     sigs = compute_signatures(clips, CFG).localCheckpoint(eager=True)
     cfgs = [CFG, dataclasses.replace(CFG, hot_shingle_cap=4)]
+    clip_rows = clips.select("clip_id", "transcript").collect()
+    sig_rows = sigs.select("clip_id", "n_shingles", "tr_len", "sketch").collect()
+    want = [_containment_reference(clip_rows, sig_rows, cfg) for cfg in cfgs]
+    assert all(want)
 
     def rows(cfg):
         return sorted(map(tuple, containment_candidates(clips, sigs, cfg).collect()))
 
-    prefilter = [rows(cfg) for cfg in cfgs]
+    assert [rows(cfg) for cfg in cfgs] == want
     _force_join_plans(monkeypatch)
-    fallback = [rows(cfg) for cfg in cfgs]
-    assert prefilter == fallback
-    assert all(prefilter)
+    assert [rows(cfg) for cfg in cfgs] == want
 
 
 _OVER_BUDGET_TEXT_VERIFY = """

@@ -53,27 +53,22 @@ def test_candidates_exchanges_carry_no_audio_bytes(corpus):
 
 
 def test_containment_prunes_clips_scan(corpus):
-    """Containment's transcript-scanning kernels read only (clip_id,
-    transcript) from the clips parquet — inspected on the LIVE kernel frames,
-    since the composed containment plan hides them behind the lazy index
-    checkpoint."""
-    from srpr_lsh_spark.operators.substring import (
-        _shingle_df_counts,
-        _shingle_index,
-        containment_candidates,
-    )
+    """Containment's one transcript-scanning kernel reads only (clip_id,
+    transcript) from the clips parquet — inspected on the LIVE
+    ``shingle_sets`` frame, since the composed containment plan hides it
+    behind the eager index checkpoint."""
+    from srpr_lsh_spark.operators.signatures import shingle_sets
+    from srpr_lsh_spark.operators.substring import containment_candidates
 
     clips, res = corpus
     frames = [
-        _shingle_df_counts(clips, CFG),
-        _shingle_index(clips, CFG),
+        shingle_sets(clips, CFG),
         containment_candidates(clips, res["signatures"], CFG),
     ]
     scans = [s for f in frames
              for s in re.findall(r"ReadSchema: struct<([^>]*)>", _formatted(f))]
     clip_scans = [s for s in scans if "transcript" in s]
-    assert clip_scans, scans
-    assert all("bytes" not in s for s in clip_scans), clip_scans
+    assert clip_scans == ["clip_id:string,transcript:string"], scans
 
 
 def test_verify_phase1_is_join_free(corpus):

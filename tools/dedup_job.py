@@ -66,7 +66,7 @@ def main(argv=None) -> int:
     ap.add_argument("--conf", action="append", default=[],
                     metavar="KEY=VALUE",
                     help="DedupConfig field override, repeatable "
-                         "(e.g. --conf shuffle_partitions=64)")
+                         "(e.g. --conf jaccard_threshold=0.85)")
     ap.add_argument("--make-pyfiles-zip", metavar="OUT_ZIP",
                     help="write the --py-files package zip and exit "
                          "(run locally, before spark-submit)")
