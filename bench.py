@@ -130,14 +130,16 @@ def _session(cpus: int, shuffle_partitions: "int | None" = None,
         # (config.tune_allocator_env) batches this size recycle arena pages
         # instead of re-faulting fresh mmap'd ones every batch.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # the verify-stage lookup sides (fingerprints/sketches) are
+        # the verify-stage join sides (fingerprints/sketches) are
         # ~0.5 KB/clip — broadcasting them removes the candidate-pair
-        # shuffles. At 200k clips the fingerprint side (~100 MB) crossed the
-        # old 128m threshold and the phase-1 attach joins silently flipped
-        # to sort-merge, sorting the multi-million-row candidate frame twice
-        # per side — measured as the verify stage ANTI-scaling (0.8× at 4×
-        # cores). 512m keeps the dimension-style lookups broadcast at bench
-        # scales; at petabyte scale AQE falls back to SMJ on its own.
+        # shuffles. At 200k clips the fingerprint side (~100 MB) once crossed
+        # the old 128m threshold and the phase-1 attach joins silently flipped
+        # to sort-merge (the verify stage ANTI-scaled, 0.8× at 4× cores).
+        # Phase 1's fp side and containment's sketch-hash union now carry a
+        # broadcast hint while they fit spark.driver.maxResultSize
+        # (operators/verify.py::fits_collect_budget), so that cliff no longer
+        # depends on this setting; 512m keeps the other narrow join sides
+        # broadcast at bench scales.
         .config("spark.sql.autoBroadcastJoinThreshold", "512m")
         # isolated mode keeps the TOTAL footprint small: this host's reclaim
         # daemon starts fault-storming around ~60 GB resident (VARIANCE.md
@@ -291,11 +293,11 @@ def bench_once(sf_dir: str, cpus: int, n_clips: "int | None" = None,
         # two parallelism levels = the per-stage stall-vs-work table the
         # scaling report prints)
         out["stage_cpu_secs"] = best["stage_cpu_secs"]
-        # candidate-mass reduction through the audio verify ladder:
-        # pairs_in → int8_pass (quantized prefilter survivors) → exact cosine.
-        # AT-LEAST-ONCE evidence (accumulators updated in a transformation —
-        # task retries inflate them; ADVICE r4 #2); empty when the small-
-        # candidate gate picked the plain join plan (no accumulators there).
+        # candidate-mass reduction through the verify ladder: {} until a
+        # per-run report fills it (ROADMAP item 1); the key stays because
+        # downstream parsers read it. AT-LEAST-ONCE evidence when filled
+        # (accumulators updated in a transformation — task retries inflate
+        # them; ADVICE r4 #2).
         out["verify_stats"] = best["verify_stats"]
         if best["verify_stats"]:
             out["verify_stats"]["semantics"] = "at-least-once"

@@ -138,7 +138,7 @@ def main() -> None:
         timed(spark, "verify_audio_noop",
               lambda: noop(verify_audio_pairs(
                   cands.filter(F.col("source") == SOURCE_SIMHASH), clips, sigs, cfg,
-                  n_candidates=n_cands, n_signatures=n_sigs)), out)
+                  n_signatures=n_sigs)), out)
         timed(spark, "verify_substr_noop",
               lambda: noop(verify_containment(
                   cands.filter(F.col("source") == "substr").select(
@@ -154,7 +154,7 @@ def main() -> None:
             cands.filter(F.col("source") == SOURCE_MINHASH), clips, cfg))
         audio = _pad(verify_audio_pairs(
             cands.filter(F.col("source") == SOURCE_SIMHASH), clips, sigs, cfg,
-            n_candidates=n_cands, n_signatures=n_sigs))
+            n_signatures=n_sigs))
         subv = _pad(verify_containment(
             cands.filter(F.col("source") == "substr").select(
                 F.col("a").alias("short"), F.col("b").alias("long")), clips, cfg))

@@ -73,17 +73,6 @@ class DedupConfig:
     sim_bits: int = 40          # b per table
     fingerprint_dim: int = 32   # D — matches the reference embedding dim (main.cpp:62)
     cosine_threshold: float = 0.997  # exact-verify acceptance on fingerprints
-    # below this many TOTAL candidate rows (warehouse manifest count — driver
-    # metadata, no job) the text and audio verifies skip their driver-collected
-    # lookups and run the plain join plans: the lookups' fixed costs (collect,
-    # lookup file write, spread shuffles) only pay for themselves on big
-    # candidate sets (measured: win at 200k clips, 2.4× loss at 20k —
-    # VERDICT r4 #2). Both plans are parity-tested equal. Above it, a lookup
-    # runs while its estimated bytes fit spark.driver.maxResultSize, else the
-    # join plan — a Spark setting, not a field (operators/verify.py::
-    # use_lookup). The same bound sets containment's broadcast hint on its
-    # sketch-hash union (n_signatures × bottom_k hashes).
-    verify_small_join_max_pairs: int = 400_000
     snr_db_threshold: float = 30.0   # decoded-PCM pair SNR acceptance (input_hint)
     # verify phase-3 decodes BOTH sides of each pair to float64 PCM; a full
     # 2048-row Arrow batch holds ~1.5 GB of decode temps per worker (and the
@@ -169,7 +158,6 @@ class DedupConfig:
         "cc_max_iters",
         "input_split_bytes",
         "aqe_advisory_bytes",  # post-shuffle layout, never the result
-        "verify_small_join_max_pairs",  # picks the verify plans, never the result
         "verify_decode_slice_rows",  # batch re-chunking, identical rows
         "signatures_chunks",  # chunk layout, identical rows
     )

@@ -1,21 +1,17 @@
-"""Fingerprint-lookup cosine kernels for the audio verify stage's phase 1.
+"""Fingerprint-lookup cosine kernels: a memmapped ``(clip_id, fp)`` lookup
+probed pair by pair, with an int8 prefilter.
 
-Why this exists (the round-3 scaling gap): the previous phase-1 plan attached
-the ``(clip_id, fp)`` lookup to the candidate-pair frame via TWO broadcast
-equi-joins, and the adaptive plan built 3+ separate ~100 MB BroadcastExchanges
-with zero ReusedExchange — ~60 s of driver-side serialization per run that did
-not shrink with cores (measured: verify stage speedup 1.04× at 4× cores,
-NOTES.md round-3 saga). On a real cluster the driver re-serializing the same
-lookup per plan branch is the coordinator bottleneck at every job.
+No pipeline stage calls these. Audio verify's phase 1 is a JVM equi-join
+plan (``operators/verify.py::_phase1_cosine``), which beat a driver-collected
+lookup built from these kernels at every shape measured on a 4-CPU host
+(1k to 100k clips). They stay because ``perfbench/layers.py`` times them as
+the per-pair cosine kernel (``kernel.pair_cosine_us``).
 
-The replacement: collect the slim lookup ONCE on the driver, write it ONCE as
-three ``.npy`` files (``save_fp_lookup``), ship them as files (``sc.addFile``
-on cluster masters, the source paths directly on local masters), and let each
-worker ``np.memmap`` them (``load_fp_lookup_mmap``). Phase 1 is then a single
-``mapInPandas`` over the candidate frame — no joins, one build, one
-page-cache copy per node, no per-worker unpickle.
+The lookup: ``save_fp_lookup`` writes the slim ``(clip_id, fp)`` rows once as
+three ``.npy`` files sorted by id, and ``load_fp_lookup_mmap`` lets each
+reader ``np.memmap`` them (one page-cache copy per node, no unpickle).
 
-Two-tier evaluation inside the kernel (the int8 prefilter):
+Two-tier evaluation inside ``pair_cosines`` (the int8 prefilter):
 
 1. quantized pass — fingerprints are L2-normalized at creation, so
    ``q = round(127·fp)`` (``quantize``) stores each vector in d bytes;
@@ -24,17 +20,14 @@ Two-tier evaluation inside the kernel (the int8 prefilter):
    star pairs) dies here touching 4× less lookup memory per row than float32
    would.
 2. exact pass — survivors only: float32 rows promoted to float64, per-row
-   ``einsum`` dot (sequential per-row summation ⇒ deterministic and
-   partitioning-invariant). This is bit-compatible with the semantics of the
-   previous JVM ``aggregate(zip_with(...))`` double-precision dot.
+   ``einsum`` dot (deterministic and partitioning-invariant). It is NOT
+   bit-compatible with phase 1's JVM ``aggregate(zip_with(...))`` dot:
+   ``einsum`` sums in a different order, so a cosine can differ by a few
+   ulp (up to 3 measured on a 1k-clip corpus).
 
-Scale boundary: the collected lookup must fit the driver collect budget,
-``spark.driver.maxResultSize`` (~7M clips at the 1 GiB default; see
-``operators/verify.py::use_lookup``); beyond it the verify stage falls back to
-the join-based plan, which is what a 10¹²-clip corpus needs anyway
-(sort-merge on a bucketed signatures table). The reference's analogue of this whole stage is
-the exact-cosine re-rank over LSH candidates (``src/lsh.h:132-145``); the
-zero-magnitude guard mirrors ``src/lsh.h:151-155``.
+The reference's analogue of phase 1 is the exact-cosine re-rank over LSH
+candidates (``src/lsh.h:132-145``); the zero-magnitude guard mirrors
+``src/lsh.h:151-155``.
 """
 
 from __future__ import annotations
@@ -55,23 +48,12 @@ def quantize(fp: np.ndarray) -> np.ndarray:
 
 
 def save_fp_lookup(ids, fps: np.ndarray, out_dir: "str | None" = None):
-    """Driver-side: write the lookup as three ``.npy`` files for file-shipped
-    (``sc.addFile`` + worker ``np.memmap``) distribution.
+    """Write the lookup as three ``.npy`` files for ``np.memmap`` readers
+    (``load_fp_lookup_mmap``): one page-cache copy per host, no unpickle.
 
-    Why files instead of a Python broadcast (the r5 process-shape fix):
-    PySpark *unpickles the broadcast payload once per Python worker process* —
-    at 16 workers × a multi-hundred-MB lookup that is GBs of duplicated RSS
-    and 16 serialized unpickle passes, and it measurably ANTI-scales in
-    process-isolated executor mode (NOTES.md r5: verify 196→274 s at 4
-    executors). A file shipped via ``addFile`` is fetched once per NODE and
-    memory-mapped by every worker on it: one page-cache copy, zero unpickle,
-    identical semantics on a real multi-executor cluster.
-
-    Rows are sorted by utf-8-encoded id so the worker-side probe is a
-    ``searchsorted`` on the memmapped fixed-width id array — no per-worker
-    index build at all. Returns ``(prefix, paths)``; pass each path to
-    ``sc.addFile`` and give workers ``prefix`` (they resolve via
-    ``SparkFiles.get``)."""
+    Rows are sorted by utf-8-encoded id so the probe is a ``searchsorted``
+    on the memmapped fixed-width id array — no per-reader index build at
+    all. Returns ``(prefix, paths)``."""
     ids_s, order = sorted_ids(ids)
     fp = np.ascontiguousarray(np.asarray(fps, dtype=np.float32)[order])
     return write_lookup("fplk", out_dir, {"ids": ids_s, "fp": fp, "q": quantize(fp)})
@@ -115,10 +97,9 @@ _MMAP_CACHE: dict = {}
 
 def load_fp_lookup_mmap(prefix: str, get_path) -> dict:
     """Worker-side: open (or reuse) the memmapped lookup written by
-    ``save_fp_lookup``. ``get_path`` maps a shipped basename to a local path
-    (``pyspark.SparkFiles.get`` on executors; a plain ``os.path.join`` in
-    tests). The arrays are read-only memmaps: fancy-indexed gathers copy only
-    the probed rows into memory."""
+    ``save_fp_lookup``. ``get_path`` maps a file basename to a local path.
+    The arrays are read-only memmaps: fancy-indexed gathers copy only the
+    probed rows into memory."""
     lk = _MMAP_CACHE.get(prefix)
     if lk is None:
         lk = {

@@ -69,21 +69,20 @@ def batch_jaccard(
 
 def save_shingle_lookup(ids, flat: np.ndarray, offsets: np.ndarray,
                         out_dir: "str | None" = None):
-    """Driver-side: write a CSR shingle-set lookup as ``.npy`` files for
-    file-shipped (``sc.addFile`` + worker ``np.memmap``) distribution — the
-    text-verify analogue of ``kernels.cosine.save_fp_lookup`` (r6).
+    """Write a CSR shingle-set lookup as ``.npy`` files for ``np.memmap``
+    readers — the text analogue of ``kernels.cosine.save_fp_lookup``.
 
-    Why: the pair-verify UDF used to join both transcripts onto every
-    candidate pair and re-normalize + re-shingle them per pair side — at 50k
-    docs / 2M candidate pairs that is ~80× redundant shingle work and
-    multi-GB of text through the Arrow boundary (guide §2.3 "shuffle keys
-    and metadata instead of payloads", §8). Shingling each distinct doc ONCE
-    and probing a memmapped CSR from the pair frame removes both.
+    No pipeline stage calls this: text verify joins both transcripts onto
+    each pair (``operators/verify.py::verify_text_pairs``), which beat a
+    driver-collected lookup built from these kernels at 1k, 20k and 100k
+    clips on a 4-CPU host. It stays, with ``load_shingle_lookup_mmap`` and
+    ``pair_jaccards``, because ``perfbench/layers.py`` times the per-pair
+    Jaccard kernel through it (``kernel.pair_jaccard_us``).
 
     ``flat``/``offsets``: the ``shingle_hashes`` CSR (sorted-unique uint64
-    per row). Rows are re-laid-out by utf-8-encoded id order so the worker
-    probe is a ``searchsorted`` on the fixed-width id array (no per-worker
-    index build). Returns ``(prefix, paths)``."""
+    per row). Rows are re-laid-out by utf-8-encoded id order so the probe is
+    a ``searchsorted`` on the fixed-width id array (no per-reader index
+    build). Returns ``(prefix, paths)``."""
     from srpr_lsh_spark.kernels.cosine import sorted_ids, write_lookup
 
     ids_s, order = sorted_ids(ids)

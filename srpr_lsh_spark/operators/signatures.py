@@ -153,8 +153,7 @@ def compute_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
 def shingle_sets(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
     """clips → (clip_id, hs): each transcript's sorted-unique k-shingle
     hashes, from ONE kernel pass over the slim (clip_id, transcript)
-    projection. The per-clip shingle frame behind both the containment
-    index and the text-verify shingle CSR."""
+    projection. The per-clip shingle frame behind the containment index."""
     k, seed = cfg.k_shingle, cfg.seed
     schema = StructType(
         [

@@ -27,7 +27,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from srpr_lsh_spark.config import DedupConfig
 from srpr_lsh_spark.kernels.text import normalize_transcript, sa_contains, suffix_array
 from srpr_lsh_spark.operators.signatures import shingle_sets
-from srpr_lsh_spark.operators.verify import use_lookup
+from srpr_lsh_spark.operators.verify import fits_collect_budget
 
 # broadcast bytes per distinct sketch hash in the union's hashed relation
 # (h long plus build-side overhead); a signature row holds at most bottom_k
@@ -50,8 +50,9 @@ def containment_candidates(
 
     The only size-dependent choice is the broadcast hint on the union: it is
     set while ``n_signatures × bottom_k × UNION_HASH_BYTES`` fits the driver
-    collect budget (``use_lookup``); ``n_signatures`` is the manifest row
-    count when the caller has it, else one ``signatures.count()`` runs."""
+    collect budget (``fits_collect_budget``); ``n_signatures`` is the
+    manifest row count when the caller has it, else one
+    ``signatures.count()`` runs."""
     eligible = signatures.filter(F.col("n_shingles") >= cfg.min_substr_shingles)
     sketch = eligible.select(
         F.col("clip_id").alias("short"),
@@ -64,7 +65,7 @@ def containment_candidates(
     )
 
     union = sketch.select("h").distinct()
-    if use_lookup(signatures, cfg.bottom_k * UNION_HASH_BYTES, cfg, n_rows=n_signatures):
+    if fits_collect_budget(signatures, cfg.bottom_k * UNION_HASH_BYTES, n_signatures):
         union = F.broadcast(union)
     # eager (r6): the index feeds the df count, long_arrs and the generation
     # join, whose stages the scheduler runs CONCURRENTLY — a lazy checkpoint

@@ -83,10 +83,7 @@ def near_dup_pairs_documents(
     # ReusedExchange — one fewer eager driver action per call.
     sigs = compute_signatures(clips, vcfg).localCheckpoint(eager=True)
     cands = combined_candidates(sigs, vcfg, sources=(SOURCE_MINHASH,))
-    # n_rows from the (already materialized) signature blocks — a metadata-
-    # cheap count that lets verify pick the shingle-lookup plan (r6) without
-    # scanning documents again
-    verified = verify_text_pairs(cands, clips, vcfg, n_rows=sigs.count())
+    verified = verify_text_pairs(cands, clips, vcfg)
     return verified.select(
         F.col("a").cast("long").alias("doc_a"),
         F.col("b").cast("long").alias("doc_b"),

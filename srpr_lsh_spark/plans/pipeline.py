@@ -184,9 +184,10 @@ def _run_dedup(
     if stop_after == "signatures":
         return out
     # stage row counts from the warehouse manifests (parquet footer metadata,
-    # recorded at write time) — containment and verify size their plans from
-    # these with ZERO extra driver actions (VERDICT r4 "what's wrong" #1: a
-    # signatures.count() was one more serial job inside a stage)
+    # recorded at write time) — containment and audio verify size their
+    # broadcast hints from these with ZERO extra driver actions (VERDICT r4
+    # "what's wrong" #1: a signatures.count() was one more serial job inside
+    # a stage)
     _m_sig = wh.manifest("signatures")
     n_sigs = _m_sig.get("rows") if _m_sig else None
 
@@ -216,23 +217,18 @@ def _run_dedup(
     if stop_after == "candidates":
         return out
 
-    audio_stats: dict = {}
-    _m_cand = wh.manifest("candidates")
-    n_cands = _m_cand.get("rows") if _m_cand else None
-
     def build_verified() -> DataFrame:
         # the four branches are independent until the union; the audio
-        # ladder's eager phase checkpoints and the text lookup's
-        # collect+ship are serial driver prologues, so build the branches
-        # from a small thread pool (guide §2.6): each thread's jobs backfill
-        # cores freed by the others' stage tails. Frames and rows unchanged.
+        # ladder's eager phase checkpoints are serial driver prologues, so
+        # build the branches from a small thread pool (guide §2.6): each
+        # thread's jobs backfill cores freed by the others' stage tails.
+        # Frames and rows unchanged.
         from concurrent.futures import ThreadPoolExecutor
 
         def mk_text():
             return _pad(
                 verify_text_pairs(
-                    cands.filter(F.col("source") == SOURCE_MINHASH), clips, cfg,
-                    n_candidates=n_cands, n_rows=n_sigs,
+                    cands.filter(F.col("source") == SOURCE_MINHASH), clips, cfg
                 )
             )
 
@@ -240,8 +236,7 @@ def _run_dedup(
             return _pad(
                 verify_audio_pairs(
                     cands.filter(F.col("source") == SOURCE_SIMHASH), clips, sigs,
-                    cfg, stats=audio_stats, n_candidates=n_cands,
-                    n_signatures=n_sigs,
+                    cfg, n_signatures=n_sigs,
                 )
             )
 
@@ -261,9 +256,6 @@ def _run_dedup(
 
     verified, sk = wh.stage("verified_pairs", build_verified)
     note("verified_pairs", sk)
-    # candidate-mass reduction through the audio verify ladder (accumulators
-    # populated by the stage action above; empty when the stage was resumed)
-    out["verify_stats"] = {k: v.value for k, v in audio_stats.items()}
     out["verified_pairs"] = verified
     if stop_after == "verified_pairs":
         return out

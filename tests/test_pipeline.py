@@ -195,22 +195,31 @@ def test_g711_reencode_dedups_against_pcm_original(spark, tmp_path):
     assert got["other"] != got["orig"]
 
 
-def _force_join_plans(monkeypatch):
-    """Shrink the driver collect budget to 0 bytes: every lookup-vs-join
-    choice (``use_lookup``) then takes its beyond-budget join plan."""
+def _zero_collect_budget(monkeypatch):
+    """Shrink the driver collect budget to 0 bytes: no join side then carries
+    a broadcast hint (``fits_collect_budget``)."""
     from srpr_lsh_spark.operators import verify
 
     monkeypatch.setattr(verify, "collect_budget_bytes", lambda sc: 0)
 
 
-def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path, monkeypatch):
-    """The two phase-1 plans — the memmapped fp lookup (within the driver
-    collect budget) and the join-based beyond-budget fallback — must verify
-    the SAME pairs with the SAME cosines: the int8 prefilter is sound (margin
-    bound), so plan choice can never change results."""
+def _sequential_dot(fa, fb) -> float:
+    """float32 components promoted to float64 (Spark hands them to Python as
+    floats, exactly), multiplied and summed left to right from 0.0."""
+    s = 0.0
+    for x, y in zip(fa, fb):
+        s += x * y
+    return s
+
+
+def test_phase1_cosine_matches_sequential_dot_reference(spark, tmp_path, monkeypatch):
+    """Phase 1 keeps exactly the candidate pairs whose sequential float64
+    fingerprint dot reaches ``cosine_threshold``, with that dot bit for bit
+    as the cosine, with and without the fp side's broadcast hint; the
+    verified rows carry the same value."""
     from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH, combined_candidates
     from srpr_lsh_spark.operators.signatures import compute_signatures
-    from srpr_lsh_spark.operators.verify import verify_audio_pairs
+    from srpr_lsh_spark.operators.verify import _phase1_cosine, verify_audio_pairs
 
     clips, _ = synthesize_clips(
         spark,
@@ -221,34 +230,33 @@ def test_phase1_join_fallback_matches_broadcast_plan(spark, tmp_path, monkeypatc
     sigs = compute_signatures(clips, cfg).localCheckpoint(eager=True)
     cands = combined_candidates(
         sigs, cfg, sources=(SOURCE_SIMHASH,)).localCheckpoint(eager=True)
+    fp = {r["clip_id"]: r["fp"] for r in sigs.select("clip_id", "fp").collect()}
+    dots = {(a, b): _sequential_dot(fp[a], fp[b]) for a, b, _ in cands.collect()
+            if fp[a] is not None and fp[b] is not None}
+    want = sorted((a, b, SOURCE_SIMHASH, d) for (a, b), d in dots.items()
+                  if d >= cfg.cosine_threshold)
+    assert want
 
-    def rows(df):
-        return sorted(
-            (r["a"], r["b"], r["source"], round(r["cosine"], 9), round(r["snr_db"], 6))
-            for r in df.collect()
-        )
+    def phase1():
+        return sorted(map(tuple, _phase1_cosine(cands, sigs, cfg).collect()))
 
-    stats_lookup, stats_join = {}, {}
-    got_lookup = rows(verify_audio_pairs(cands, clips, sigs, cfg, stats=stats_lookup))
-    _force_join_plans(monkeypatch)
-    got_join = rows(verify_audio_pairs(cands, clips, sigs, cfg, stats=stats_join))
-    assert got_lookup == got_join
-    assert len(got_lookup) > 0
-    # only the lookup plan records its accumulators: each call took its plan
-    assert "pairs_in" in stats_lookup and not stats_join
+    assert phase1() == want
+    verified = verify_audio_pairs(cands, clips, sigs, cfg).collect()
+    assert verified
+    assert [r["cosine"] for r in verified] == [dots[r["a"], r["b"]] for r in verified]
+    _zero_collect_budget(monkeypatch)
+    assert phase1() == want
 
 
-def test_text_lookup_plan_matches_join_plan(spark, tmp_path, monkeypatch):
-    """The two text-verify plans — memmapped shingle-CSR lookup (r6) and the
-    transcript-join fallback — must verify the SAME pairs with the SAME
-    jaccard values: the size-bound prefilter is exact (J ≤ min/max), so plan
-    choice can never change results. Also pins the gating: a small candidate
-    count or an over-budget CSR selects the join plan."""
+def test_text_verify_matches_jaccard_reference(spark, tmp_path):
+    """``verify_text_pairs`` keeps exactly the candidate pairs whose scalar
+    Jaccard (``kernels.text.jaccard`` over each side's normalized transcript
+    shingle set) reaches ``jaccard_threshold``, with that value exactly."""
+    from srpr_lsh_spark.kernels.hashing import shingle_hashes
+    from srpr_lsh_spark.kernels.text import jaccard, normalize_transcript
     from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, combined_candidates
     from srpr_lsh_spark.operators.signatures import compute_signatures
-    from srpr_lsh_spark.operators.verify import (
-        CSR_ROW_BYTES, _verify_text_join, use_lookup, verify_text_pairs,
-    )
+    from srpr_lsh_spark.operators.verify import verify_text_pairs
 
     clips, _ = synthesize_clips(
         spark,
@@ -257,30 +265,18 @@ def test_text_lookup_plan_matches_join_plan(spark, tmp_path, monkeypatch):
     )
     cfg = CFG
     sigs = compute_signatures(clips, cfg).localCheckpoint(eager=True)
-    n = sigs.count()
     cands = combined_candidates(
         sigs, cfg, sources=(SOURCE_MINHASH,)).localCheckpoint(eager=True)
-    gate = cfg.verify_small_join_max_pairs
-
-    def rows(df):
-        return sorted(
-            (r["a"], r["b"], r["source"], r["jaccard"]) for r in df.collect()
-        )
-
-    def lookup_taken(n_candidates):
-        return use_lookup(clips, CSR_ROW_BYTES, cfg, n_rows=n, n_candidates=n_candidates)
-
-    got_join = rows(_verify_text_join(cands, clips, cfg))
-    # n_candidates above the small-join gate → lookup plan
-    assert lookup_taken(gate + 1) and not lookup_taken(gate - 1)
-    got_lookup = rows(verify_text_pairs(cands, clips, cfg, n_candidates=gate + 1, n_rows=n))
-    assert got_lookup == got_join
-    assert len(got_join) > 0
-    # an over-budget CSR falls back to the join plan, same rows
-    _force_join_plans(monkeypatch)
-    assert not lookup_taken(gate + 1)
-    got_fallback = rows(verify_text_pairs(cands, clips, cfg, n_candidates=gate + 1, n_rows=n))
-    assert got_fallback == got_join
+    rows = clips.select("clip_id", "transcript").collect()
+    flat, off = shingle_hashes(
+        normalize_transcript([r["transcript"] for r in rows]), k=cfg.k_shingle, seed=cfg.seed)
+    sets = {r["clip_id"]: flat[off[i]:off[i + 1]] for i, r in enumerate(rows)}
+    js = {(a, b): jaccard(sets[a], sets[b]) for a, b, _ in cands.collect()}
+    want = sorted((a, b, SOURCE_MINHASH, j) for (a, b), j in js.items()
+                  if j >= cfg.jaccard_threshold)
+    assert want
+    got = sorted(map(tuple, verify_text_pairs(cands, clips, cfg).collect()))
+    assert got == want
 
 
 def _containment_reference(clip_rows, sig_rows, cfg) -> list:
@@ -348,44 +344,54 @@ def test_containment_matches_bruteforce_reference(spark, tmp_path, monkeypatch):
         return sorted(map(tuple, containment_candidates(clips, sigs, cfg).collect()))
 
     assert [rows(cfg) for cfg in cfgs] == want
-    _force_join_plans(monkeypatch)
+    _zero_collect_budget(monkeypatch)
     assert [rows(cfg) for cfg in cfgs] == want
 
 
-_OVER_BUDGET_TEXT_VERIFY = """
+_OVER_BUDGET_PHASE1 = """
 import json, sys
 from pyspark.sql import SparkSession
 from srpr_lsh_spark.config import DedupConfig
-from srpr_lsh_spark.operators.verify import verify_text_pairs
+from srpr_lsh_spark.operators import verify
 
 data, limit, n_rows, out = sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4]
 spark = (SparkSession.builder.master("local[2]")
          .config("spark.driver.maxResultSize", limit)
+         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
          .config("spark.driver.memory", "1g")
          .config("spark.sql.shuffle.partitions", "4")
          .config("spark.ui.enabled", "false").getOrCreate())
 cfg = DedupConfig(shuffle_partitions=8)
 clips = spark.read.parquet(data + "/clips_full").drop("cluster_id", "role")
+sigs = spark.read.parquet(data + "/sigs")
 cands = spark.read.parquet(data + "/cands")
-got = verify_text_pairs(cands, clips, cfg,
-                        n_candidates=cfg.verify_small_join_max_pairs + 1, n_rows=n_rows)
-json.dump([list(r) for r in got.collect()], open(out, "w"))
+run = lambda: verify.verify_audio_pairs(cands, clips, sigs, cfg, n_signatures=n_rows).collect()
+rows = [list(r) for r in run()]
+# the same call with the fp side's broadcast hint forced on
+verify.collect_budget_bytes = lambda sc: 1 << 62
+try:
+    run()
+    aborted = None
+except Exception as e:
+    aborted = str(e)
+json.dump({"rows": rows, "aborted": aborted}, open(out, "w"))
 spark.stop()
 """
 
 
-def test_text_verify_over_budget_takes_join_plan(spark, tmp_path):
-    """A shingle CSR larger than ``spark.driver.maxResultSize`` must take the
-    join plan, not abort the job on the driver result-size check. Runs in a
-    fresh session whose limit sits below the corpus's CSR bytes but above
-    every other collect or broadcast of the call (the transcript side of the
-    join plan and the verified rows)."""
+def test_phase1_over_budget_drops_fp_hint(spark, tmp_path):
+    """An fp side larger than ``spark.driver.maxResultSize`` must not carry
+    the broadcast hint: with Spark's own broadcasts off, audio verify then
+    completes with the in-process rows, while the same call with the hint
+    forced on aborts the job on the driver result-size check. Runs in a
+    fresh session whose limit sits below the fp side's bytes but above the
+    verified rows' collect."""
     import subprocess
     import sys
 
-    from srpr_lsh_spark.operators.banding import SOURCE_MINHASH, combined_candidates
+    from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH, combined_candidates
     from srpr_lsh_spark.operators.signatures import compute_signatures
-    from srpr_lsh_spark.operators.verify import CSR_ROW_BYTES, _verify_text_join
+    from srpr_lsh_spark.operators.verify import ID_BYTES, verify_audio_pairs
 
     data = tmp_path / "d"
     clips, _ = synthesize_clips(
@@ -393,29 +399,30 @@ def test_text_verify_over_budget_takes_join_plan(spark, tmp_path):
         SynthParams(n_clips=400, block_size=100, seed=11, min_dur_ms=300, max_dur_ms=600),
         out_dir=str(data),
     )
-    sigs = compute_signatures(clips, CFG).localCheckpoint(eager=True)
+    compute_signatures(clips, CFG).write.parquet(str(data / "sigs"))
+    sigs = spark.read.parquet(str(data / "sigs"))
     n = sigs.count()
-    combined_candidates(sigs, CFG, sources=(SOURCE_MINHASH,)).write.parquet(
+    combined_candidates(sigs, CFG, sources=(SOURCE_SIMHASH,)).write.parquet(
         str(data / "cands"))
     cands = spark.read.parquet(str(data / "cands"))
-    want = sorted((r["a"], r["b"], r["source"], r["jaccard"])
-                  for r in _verify_text_join(cands, clips, CFG).collect())
+    want = sorted(tuple(r) for r in verify_audio_pairs(cands, clips, sigs, CFG).collect())
     assert want
 
-    limit = 256 << 10
-    assert n * CSR_ROW_BYTES > limit
+    limit = 32 << 10
+    assert n * (4 * CFG.fingerprint_dim + ID_BYTES) > limit
     out = tmp_path / "rows.json"
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(
         p for p in (root, os.environ.get("PYTHONPATH")) if p))
     proc = subprocess.run(
-        [sys.executable, "-c", _OVER_BUDGET_TEXT_VERIFY, str(data), str(limit), str(n),
+        [sys.executable, "-c", _OVER_BUDGET_PHASE1, str(data), str(limit), str(n),
          str(out)],
         cwd=root, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    got = sorted(tuple(r) for r in json.load(open(out)))
-    assert got == want
+    got = json.load(open(out))
+    assert sorted(tuple(r) for r in got["rows"]) == want
+    assert "spark.driver.maxResultSize" in (got["aborted"] or ""), got["aborted"]
 
 
 def test_chunked_signatures_partition_resume(spark, tmp_path):

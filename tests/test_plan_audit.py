@@ -71,13 +71,29 @@ def test_containment_prunes_clips_scan(corpus):
     assert clip_scans == ["clip_id:string,transcript:string"], scans
 
 
-def test_verify_phase1_is_join_free(corpus):
-    """Phase 1 probes one shipped lookup inside a mapInPandas: zero
-    BroadcastExchange in its sub-plan."""
-    from srpr_lsh_spark.operators.verify import _phase1_cosine_lookup
+def test_verify_phase1_broadcasts_fp_side(spark, corpus, monkeypatch):
+    """Phase 1 plans both fp attaches as BroadcastHashJoin by their hint
+    (no SortMergeJoin), even at Spark's default 10 MB threshold; its fp-side
+    scan of the warehouse signatures reads only (clip_id, fp); with a zero
+    collect budget neither attach carries the hint."""
+    from srpr_lsh_spark.operators import verify
 
     _, res = corpus
     cands = res["candidates"].filter(F.col("source") == SOURCE_SIMHASH)
-    phase1 = _phase1_cosine_lookup(cands, res["signatures"], CFG)
-    plan = phase1._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastExchange") == 0, plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10MB")
+    try:
+        phase1 = verify._phase1_cosine(cands, res["signatures"], CFG)
+        plan = phase1._jdf.queryExecution().executedPlan().toString()
+        hints = phase1._jdf.queryExecution().optimizedPlan().toString()
+        monkeypatch.setattr(verify, "collect_budget_bytes", lambda sc: 0)
+        bare = verify._phase1_cosine(cands, res["signatures"], CFG)
+        bare_hints = bare._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert plan.count("BroadcastHashJoin") == 2 and "SortMergeJoin" not in plan, plan
+    fp_scans = {s for s in re.findall(r"ReadSchema: (\S+)", _formatted(phase1)) if "fp:" in s}
+    assert fp_scans == {"struct<clip_id:string,fp:array<float>>"}, fp_scans
+    assert hints.count("strategy=broadcast") == 2, hints
+    assert "strategy=broadcast" not in bare_hints, bare_hints
