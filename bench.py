@@ -81,18 +81,21 @@ def _scratch_dir() -> str:
 
 
 def _proc_group_cpu() -> "float | None":
-    """CPU-seconds (utime+stime) of every LIVE process in this process group
-    — the bench python driver, the py4j-launched JVM, and its python workers
-    all share the pgid. This is the measurement the scaling report's CPU
-    column makes its stall-vs-work argument with; RUSAGE_CHILDREN can NOT
-    provide it (the JVM is a grandchild the sub-run never waits on, so its
-    rusage never rolls up — the r5-200k study's CPU column measured only the
-    python driver). Caveat: CPU of processes that exited between two samples
-    is not seen; the JVM and (reused) python workers live across the dedup
-    window this brackets, so the delta is a floor within a few percent."""
-    from srpr_lsh_spark.hoststat import proc_group_cpu
+    """CPU-seconds of this process tree — the bench python driver, the
+    py4j-launched JVM and its python workers (``hoststat.tree_cpu_s``). This
+    is the measurement the scaling report's CPU column makes its
+    stall-vs-work argument with."""
+    from srpr_lsh_spark.hoststat import tree_cpu_s
 
-    return proc_group_cpu()
+    return tree_cpu_s()
+
+
+def _driver_heap_mb() -> int:
+    """local-mode driver heap: a quarter of ``MemTotal``, 1-24 GiB, so the
+    JVM, its off-heap buffers and the Python workers fit beside it."""
+    from srpr_lsh_spark.hoststat import mem_total_mb
+
+    return min(24576, max(1024, (mem_total_mb() or 8192) // 4))
 
 
 def _session(cpus: int, shuffle_partitions: "int | None" = None,
@@ -147,7 +150,8 @@ def _session(cpus: int, shuffle_partitions: "int | None" = None,
         # holds every localCheckpoint block alone, exactly as a real
         # cluster's per-executor share would demand — and the study keeps
         # total resident under the storm threshold via corpus size instead.
-        .config("spark.driver.memory", "24g" if executors is None else "6g")
+        .config("spark.driver.memory",
+                f"{_driver_heap_mb()}m" if executors is None else "6g")
         .config("spark.local.dir", scratch)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -277,7 +281,7 @@ def bench_once(sf_dir: str, cpus: int, n_clips: "int | None" = None,
             })
         cpu1 = _proc_group_cpu()
         if cpu0 is not None and cpu1 is not None:
-            # dedup-window CPU of the whole live process group (JVM + python
+            # dedup-window CPU of the whole live process tree (JVM + python
             # workers + driver), averaged per rep so it pairs with dedup_sec
             out["cpu_sec"] = round((cpu1 - cpu0) / max(1, bench_reps), 1)
         best = min(runs, key=lambda r: r["dedup_sec"])
@@ -339,7 +343,7 @@ def _one_scaling_run(sf_dir: str, n_exec: "int | None", cores: int,
     # parallel speedup because the work serialized" from "because the socket
     # ran out of memory bandwidth" — equal CPU at both levels + longer wall
     # = stall time (VERDICT r4 #1). The sub-run measures its own process
-    # group via /proc (see _proc_group_cpu); the RUSAGE_CHILDREN delta here
+    # tree via /proc (see _proc_group_cpu); the RUSAGE_CHILDREN delta here
     # is only a /proc-less fallback (it misses the JVM grandchild entirely).
     import resource
 

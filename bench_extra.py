@@ -18,7 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import DEFAULT_CPUS, _proc_group_cpu, _session
+from bench import DEFAULT_CPUS, _session
+from srpr_lsh_spark.hoststat import tree_cpu_s
 
 
 def noop(df) -> None:
@@ -27,9 +28,9 @@ def noop(df) -> None:
 
 def timed(spark, label: str, fn, out: dict) -> None:
     spark.sparkContext.setJobDescription(label)
-    t0, c0 = time.time(), _proc_group_cpu()
+    t0, c0 = time.time(), tree_cpu_s()
     fn()
-    t1, c1 = time.time(), _proc_group_cpu()
+    t1, c1 = time.time(), tree_cpu_s()
     out[label] = {"wall_s": round(t1 - t0, 2),
                   "cpu_s": round((c1 - c0), 1) if c0 is not None else None}
     print(json.dumps({label: out[label]}), flush=True)

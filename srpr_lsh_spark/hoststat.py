@@ -1,10 +1,10 @@
-"""Process-group CPU accounting (/proc) — the stall-vs-work instrument.
+"""Process-tree CPU accounting (/proc) — the stall-vs-work instrument.
 
 Wall-clock alone cannot distinguish "this stage stopped scaling because its
 work serialized" from "because the host ran out of memory bandwidth / page
 faulted": both show sub-linear speedup. CPU-seconds across the whole process
-group (driver + py4j-launched JVM + its forked python workers, which all
-share the pgid) separates them:
+tree (this driver, the py4j-launched JVM child and the PySpark Python
+workers the JVM forks) separates them:
 
 - equal CPU at both parallelism levels + sub-linear wall → the extra threads
   waited OFF-cpu (scheduling floors, page-fault/IO, sleeping locks); the job
@@ -18,9 +18,10 @@ share the pgid) separates them:
   scale 3.97× with flat CPU; shuffle/numpy-heavy candidates+verify inflate
   ~2× — a real cluster adds a socket with every executor).
 
-``RUSAGE_CHILDREN`` cannot provide this: the JVM is a grandchild the python
-process never waits on, so its rusage never rolls up (measured in the r5
-200k study, whose CPU column silently counted only the python driver).
+The tree, not the process group: PySpark's daemon moves itself and every
+worker it forks into a new process group, so a process-group sum misses all
+UDF CPU. ``RUSAGE_CHILDREN`` cannot provide it either: the JVM is a child the
+python process never waits on, so its rusage never rolls up.
 
 Caveat: CPU of processes that exited between two samples is not seen. The
 JVM and (reused) python workers live across any window worth measuring, so
@@ -32,28 +33,43 @@ from __future__ import annotations
 import os
 
 
-def proc_group_cpu() -> "float | None":
-    """CPU-seconds (utime+stime) of every LIVE process in this process group.
+def tree_cpu_s() -> "float | None":
+    """CPU-seconds (utime+stime) of this process and every LIVE descendant.
 
     Returns None where /proc or sysconf is unavailable (non-Linux)."""
     try:
-        pgid = os.getpgid(0)
         hz = os.sysconf("SC_CLK_TCK")
+        pids = [d for d in os.listdir("/proc") if d.isdigit()]
     except (OSError, ValueError):
         return None
-    total_ticks = 0
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
+    kids: dict = {}
+    ticks: dict = {}
+    for d in pids:
         try:
             with open(f"/proc/{d}/stat", "rb") as f:
                 st = f.read().decode("ascii", "replace")
             # fields after the parenthesized comm (which may contain spaces)
             rest = st.rsplit(")", 1)[1].split()
-            # rest[2] = pgrp, rest[11] = utime, rest[12] = stime
-            if int(rest[2]) != pgid:
-                continue
-            total_ticks += int(rest[11]) + int(rest[12])
+            # rest[1] = ppid, rest[11] = utime, rest[12] = stime
+            kids.setdefault(int(rest[1]), []).append(int(d))
+            ticks[int(d)] = int(rest[11]) + int(rest[12])
         except (OSError, IndexError, ValueError):
             continue  # raced with process exit
-    return total_ticks / hz
+    total, todo = 0, [os.getpid()]
+    while todo:
+        pid = todo.pop()
+        total += ticks.get(pid, 0)
+        todo.extend(kids.get(pid, ()))
+    return total / hz
+
+
+def mem_total_mb() -> "int | None":
+    """Physical memory (``MemTotal``) in MiB, or None without /proc."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return None

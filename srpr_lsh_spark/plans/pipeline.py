@@ -91,7 +91,7 @@ def _run_dedup(
 ) -> dict:
     import time
 
-    from srpr_lsh_spark.hoststat import proc_group_cpu
+    from srpr_lsh_spark.hoststat import tree_cpu_s
 
     wh = Warehouse(
         spark, warehouse_dir, cfg.config_hash(), resume=resume,
@@ -100,7 +100,7 @@ def _run_dedup(
     out: dict = {"warehouse": wh, "skipped": [], "stage_secs": {},
                  "stage_cpu_secs": {}}
     t_mark = time.time()
-    c_mark = proc_group_cpu()
+    c_mark = tree_cpu_s()
 
     def note(name, skipped):
         nonlocal t_mark, c_mark
@@ -108,13 +108,13 @@ def _run_dedup(
             out["skipped"].append(name)
         out["stage_secs"][name] = round(time.time() - t_mark, 2)
         t_mark = time.time()
-        # per-stage process-group CPU (driver + JVM + python workers): wall
+        # per-stage process-tree CPU (driver + JVM + python workers): wall
         # and CPU together attribute lost scaling — flat CPU + sub-linear
         # wall = off-cpu waits (scheduling/IO floors); inflated CPU = on-cpu
         # cycles that don't advance the job (spin, spill, DRAM-stall cycles,
         # which still accrue utime). See srpr_lsh_spark/hoststat.py.
         if c_mark is not None:
-            c_now = proc_group_cpu()
+            c_now = tree_cpu_s()
             if c_now is not None:
                 out["stage_cpu_secs"][name] = round(c_now - c_mark, 1)
                 c_mark = c_now

@@ -1,13 +1,14 @@
-"""Unit pin for bench._proc_group_cpu — the measurement the scaling
-report's CPU column makes its stall-vs-work argument with (r5: replaced a
-RUSAGE_CHILDREN delta that could not see the JVM grandchild). No Spark
-session needed: the property under test is "live process-group CPU is
-captured, and burning CPU in this group moves the reading by about the
-burned amount"."""
+"""Unit pins for the process-tree CPU meter (``hoststat.tree_cpu_s``, which
+bench._proc_group_cpu and run_dedup's ``stage_cpu_secs`` read) — the
+measurement the scaling report's CPU column makes its stall-vs-work argument
+with. The property under test is "live CPU of this process and everything
+below it is captured": the driver's own burn, and a burn inside a PySpark
+Python worker, which the daemon runs in a process group of its own."""
 
 import time
 
 import bench
+from srpr_lsh_spark.hoststat import tree_cpu_s
 
 
 def test_proc_group_cpu_returns_positive_float():
@@ -27,6 +28,30 @@ def test_proc_group_cpu_sees_own_burn():
     # delta includes any sibling activity in the group, so it is a lower
     # bound modulo clock-tick granularity (1/HZ)
     assert delta >= burned - 0.1, (before, delta, burned)
+
+
+def test_tree_cpu_counts_python_worker_burn(spark):
+    def run(secs):
+        def burn(batches):
+            import pandas as pd
+
+            t0 = time.process_time()
+            while time.process_time() - t0 < secs:
+                pass
+            for _ in batches:
+                pass
+            yield pd.DataFrame({"burned": [time.process_time() - t0]})
+
+        df = spark.range(1, numPartitions=1).mapInPandas(burn, "burned double")
+        return df.collect()[0]["burned"]
+
+    run(0.0)  # JIT and worker start-up stay out of the measured window
+    before = tree_cpu_s()
+    burned = run(1.5)  # 1.5 CPU-seconds inside the Python worker
+    delta = tree_cpu_s() - before
+    assert burned >= 1.5
+    # driver + JVM + worker: at least the worker's burn, modulo 1/HZ ticks
+    assert delta >= burned - 0.1, (delta, burned)
 
 
 def test_default_cpus_honors_env(monkeypatch):

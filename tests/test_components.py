@@ -6,7 +6,7 @@ import dataclasses
 import numpy as np
 import pytest
 
-from srpr_lsh_spark.operators.components import connected_components
+from srpr_lsh_spark.operators.components import connected_components, star_forest
 
 
 def _uf_oracle(nodes, edges):
@@ -79,6 +79,71 @@ def test_giant_star(spark):
     edges = [(nodes[0], x) for x in nodes[1:]]
     got = _run(spark, nodes, edges)
     assert set(got.values()) == {nodes[0]}
+
+
+@pytest.fixture
+def no_coalesce(spark):
+    """AQE keeps every shuffle partition, so components span partitions and
+    the contraction leaves work for the star loop."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    yield spark
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)
+
+
+def test_long_chain_spanning_partitions(no_coalesce):
+    spark = no_coalesce
+    n = 64
+    nodes = [f"c{i:03d}" for i in range(n)]
+    edges = [(nodes[i], nodes[i + 1]) for i in range(n - 1)]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _run(spark, nodes, edges, max_iters=0)
+    got = _run(spark, nodes, edges, max_iters=12)
+    assert got == _uf_oracle(nodes, edges)
+
+
+@pytest.mark.parametrize("seed", [3, 4])
+def test_random_graphs_spanning_partitions(no_coalesce, seed):
+    spark = no_coalesce
+    rng = np.random.default_rng(seed)
+    n = 120
+    nodes = [f"n{i:04d}" for i in range(n)]
+    edges = {
+        tuple(sorted((nodes[int(rng.integers(0, n))], nodes[int(rng.integers(0, n))])))
+        for _ in range(int(rng.integers(60, 140)))
+    }
+    edges = {(a, b) for a, b in edges if a != b}
+    assert _run(spark, nodes, edges) == _uf_oracle(nodes, edges)
+
+
+def test_contraction_alone_labels_coalesced_path(spark):
+    """AQE coalesces a small edge shuffle into one partition, whose
+    union-find is the whole answer: the fixpoint probe holds with no star
+    cycle at all."""
+    n = 64
+    nodes = [f"c{i:03d}" for i in range(n)]
+    edges = [(nodes[i], nodes[i + 1]) for i in range(n - 1)]
+    got = _run(spark, nodes, edges, max_iters=0)
+    assert set(got.values()) == {nodes[0]}
+
+
+def test_star_forest_matches_union_find():
+    rng = np.random.default_rng(5)
+    for trial in range(50):
+        n = int(rng.integers(1, 80))
+        ids = np.array([f"k{i}" for i in rng.permutation(n)], dtype=object)
+        m = int(rng.integers(0, 120))
+        a, b = ids[rng.integers(0, n, m)], ids[rng.integers(0, n, m)]
+        member, root = star_forest(a, b)
+        assert len(set(member)) == len(member)
+        assert (member > root).all()
+        seen = sorted(set(a) | set(b))
+        got = {x: x for x in seen} | dict(zip(member, root))
+        assert got == _uf_oracle(seen, list(zip(a, b))), trial
 
 
 class TestOverCapStarBucket:
