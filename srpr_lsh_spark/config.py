@@ -72,18 +72,10 @@ class DedupConfig:
     sim_tables: int = 8         # L
     sim_bits: int = 40          # b per table
     fingerprint_dim: int = 32   # D — matches the reference embedding dim (main.cpp:62)
-    cosine_threshold: float = 0.997  # exact-verify acceptance on fingerprints
-    snr_db_threshold: float = 30.0   # decoded-PCM pair SNR acceptance (input_hint)
-    # verify phase-3 decodes BOTH sides of each pair to float64 PCM; a full
-    # 2048-row Arrow batch holds ~1.5 GB of decode temps per worker (and the
-    # long-lived arena — tune_allocator_env — retains that high-water mark
-    # forever, which at 8-16 workers fed this host's reclaim storm in the r5
-    # 400k study). The UDF therefore re-chunks each incoming batch to this
-    # many rows: per-task memory stays bounded in CLIP SIZE, not row count —
-    # the property a 100 TB corpus with MB-scale clips needs anyway.
-    verify_decode_slice_rows: int = 192
-    sketch_points: int = 512         # decimated-PCM sketch length (~1 ms stride)
-    sketch_margin_db: float = 3.0    # sketch-SNR prefilter slack vs full check
+    # audio verify is two phases: the fingerprint cosine keeps a pair from
+    # ever decoding, then the decoded-PCM pair SNR is the acceptance rule
+    cosine_threshold: float = 0.997  # phase 1: exact cosine on fingerprints
+    snr_db_threshold: float = 30.0   # phase 2: decoded-PCM pair SNR (input_hint)
     # --- substring (suffix-array) path ---
     bottom_k: int = 32          # bottom-k shingle sketch size for containment
                                 # candidates (r3: 16 → 32 — at 100k clips the
@@ -158,7 +150,6 @@ class DedupConfig:
         "cc_max_iters",
         "input_split_bytes",
         "aqe_advisory_bytes",  # post-shuffle layout, never the result
-        "verify_decode_slice_rows",  # batch re-chunking, identical rows
         "signatures_chunks",  # chunk layout, identical rows
     )
 

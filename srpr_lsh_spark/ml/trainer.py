@@ -123,8 +123,7 @@ def _combine_partials(u, i, j, gxu, gyi, gyj, ll) -> "pd.DataFrame":
     """Per-partition gradient combine: unique entities only leave the worker;
     the epoch log-likelihood partial rides along as a sentinel row
     (zero-padded to d: ANSI mode rejects short-array indexing in the
-    per-dimension sum aggregation). Shared by the driver-resident and the
-    block-partitioned epoch."""
+    per-dimension sum aggregation)."""
     out_kind, out_idx, out_cnt, out_g = [], [], [], []
     uq, uinv = np.unique(u, return_inverse=True)
     gu = np.zeros((uq.size, gxu.shape[1]))

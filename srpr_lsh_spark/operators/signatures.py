@@ -62,10 +62,6 @@ def signatures_schema() -> StructType:
             StructField("sketch", ArrayType(LongType(), False), True),
             StructField("fp", ArrayType(FloatType(), False), True),
             StructField("sim_keys", ArrayType(LongType(), False), True),
-            # ~1 ms-stride decimated PCM: lets the verifier estimate pair SNR
-            # without re-shipping audio bytes (prefix-stable within a sample
-            # rate, so trimmed-prefix duplicates keep the prefix property)
-            StructField("pcm_sketch", ArrayType(FloatType(), False), True),
         ]
     )
 
@@ -85,7 +81,6 @@ def compute_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
     k, n_perm, bands, rows = cfg.k_shingle, cfg.n_perm, cfg.bands, cfg.rows
     bottom_k, seed, dim = cfg.bottom_k, cfg.seed, cfg.fingerprint_dim
     tables, bits = cfg.sim_tables, cfg.sim_bits
-    sketch_points = cfg.sketch_points
 
     def gen(batches):
         pl = bplanes.value
@@ -99,30 +94,20 @@ def compute_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
             bh = band_hashes(sig, bands=bands, rows=rows, seed=seed)
             skf, sko = bottom_k_sketch(flat, off, k=bottom_k)
             fps = np.zeros((n, dim), dtype=np.float32)
-            sketches: list[np.ndarray] = []
             blobs = pdf["bytes"].tolist()
             codecs = pdf["codec"].tolist()
-            srs = pdf["sr_hz"].tolist()
-            empty_sketch = np.empty(0, dtype=np.float32)
             for i, blob in enumerate(blobs):
-                if blob is not None and len(blob) > 0:
+                if blob is None or len(blob) == 0:
+                    continue
+                try:
                     pcm = decode_pcm16_wav(bytes(blob), codec=codecs[i])
-                    fps[i] = fingerprint(pcm, dim=dim)
-                    # NULL sr_hz reaches pandas as NaN, and NaN is TRUTHY —
-                    # `int(sr or 16000)` raises on it, and one malformed row
-                    # must not kill a 10¹²-row scan (caught by
-                    # tests/test_pipeline.py::test_null_fields...). The
-                    # ``sr > 0`` keeps the historical 0→16000 fallback so
-                    # degenerate rows get the same stride under both rules
-                    # (r5 ADVICE #2).
-                    sr = srs[i]
-                    sr = int(sr) if sr is not None and sr == sr and sr > 0 else 16000
-                    stride = max(1, sr // 1000)
-                    sketches.append(
-                        pcm[:: stride][:sketch_points].astype(np.float32)
-                    )
-                else:
-                    sketches.append(empty_sketch)
+                except (ValueError, NotImplementedError):
+                    # a truncated header or an unknown codec: the row has no
+                    # audio, exactly like NULL bytes (zero fp, so phase 1
+                    # drops every audio pair it is in) — one malformed row
+                    # must not kill a 10¹²-row scan
+                    continue
+                fps[i] = fingerprint(pcm, dim=dim)
             skeys = srp_keys(fps, pl, tables=tables, bits=bits)
             sig_i64 = sig.view(np.int64)
             yield pd.DataFrame(
@@ -139,11 +124,10 @@ def compute_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
                     "sketch": [skf[sko[i] : sko[i + 1]] for i in range(n)],
                     "fp": [fps[i] for i in range(n)],
                     "sim_keys": [skeys[i] for i in range(n)],
-                    "pcm_sketch": sketches,
                 }
             )
 
-    cols = ["clip_id", "bytes", "codec", "sr_hz", "transcript"]
+    cols = ["clip_id", "bytes", "codec", "transcript"]
     # NB: no repartition here — audio bytes must never shuffle (SURVEY §7.3.5).
     # Scan parallelism for this CPU-heavy stage is controlled by the input
     # split size instead (run_dedup pins spark.sql.files.maxPartitionBytes).

@@ -29,24 +29,9 @@ from srpr_lsh_spark.kernels.hashing import shingle_hashes
 from srpr_lsh_spark.kernels.text import batch_jaccard, normalize_transcript
 
 
-def _attach(
-    pairs: DataFrame,
-    lookup: DataFrame,
-    cols: "dict[str, str]",
-    on: str,
-    shrink: bool = True,
-) -> DataFrame:
-    """Join ``lookup`` columns onto ``pairs`` for side ``on`` ('a' or 'b').
-
-    ``shrink=True`` first semi-joins ``lookup`` down to the referenced ids so
-    wide columns (audio bytes) never shuffle for unreferenced rows — worth two
-    extra shuffles only when the payload dwarfs them. Narrow lookups
-    (fingerprints, sketches, transcripts) join directly."""
-    slim = lookup
-    if shrink:
-        ids = pairs.select(F.col(on).alias("clip_id")).distinct()
-        slim = lookup.join(ids, "clip_id", "left_semi")
-    slim = slim.select(
+def _attach(pairs: DataFrame, lookup: DataFrame, cols: "dict[str, str]", on: str) -> DataFrame:
+    """Join ``lookup`` columns onto ``pairs`` for side ``on`` ('a' or 'b')."""
+    slim = lookup.select(
         F.col("clip_id").alias(on), *[F.col(src).alias(dst) for src, dst in cols.items()]
     )
     return pairs.join(slim, on)
@@ -124,8 +109,8 @@ def verify_text_pairs(
     4-CPU host, at both the 10 MB and 512 MB broadcast thresholds."""
     pairs = _spread(pairs)
     t = clips.select("clip_id", "transcript")
-    withz = _attach(pairs, t, {"transcript": "ta"}, "a", shrink=False)
-    withz = _attach(withz, t, {"transcript": "tb"}, "b", shrink=False)
+    withz = _attach(pairs, t, {"transcript": "ta"}, "a")
+    withz = _attach(withz, t, {"transcript": "tb"}, "b")
     k, seed, thr = cfg.k_shingle, cfg.seed, cfg.jaccard_threshold
 
     def gen(batches):
@@ -143,16 +128,6 @@ def verify_text_pairs(
             yield out
 
     return withz.mapInPandas(gen, schema=TEXT_SCHEMA)
-
-
-PRE_SCHEMA = StructType(
-    [
-        StructField("a", StringType(), False),
-        StructField("b", StringType(), False),
-        StructField("source", StringType(), False),
-        StructField("cosine", DoubleType(), False),
-    ]
-)
 
 
 def _phase1_cosine(
@@ -174,8 +149,8 @@ def _phase1_cosine(
     fp_side = signatures.select("clip_id", "fp")
     if fits_collect_budget(signatures, 4 * cfg.fingerprint_dim + ID_BYTES, n_signatures):
         fp_side = F.broadcast(fp_side)
-    withf = _attach(pairs, fp_side, {"fp": "fa"}, "a", shrink=False)
-    withf = _attach(withf, fp_side, {"fp": "fb"}, "b", shrink=False)
+    withf = _attach(pairs, fp_side, {"fp": "fa"}, "a")
+    withf = _attach(withf, fp_side, {"fp": "fb"}, "b")
     dot = F.aggregate(
         F.zip_with("fa", "fb", lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -188,6 +163,17 @@ def _phase1_cosine(
     )
 
 
+AUDIO_SCHEMA = StructType(
+    [
+        StructField("a", StringType(), False),
+        StructField("b", StringType(), False),
+        StructField("source", StringType(), False),
+        StructField("cosine", DoubleType(), False),
+        StructField("snr_db", DoubleType(), False),
+    ]
+)
+
+
 def verify_audio_pairs(
     pairs: DataFrame, clips: DataFrame, signatures: DataFrame, cfg: DedupConfig,
     stats: "dict | None" = None,  # unused; perfbench/layers.py passes it
@@ -196,68 +182,34 @@ def verify_audio_pairs(
 ) -> DataFrame:
     """(a, b, source) → verified (a, b, source, cosine, snr_db).
 
-    Three phases, each shrinking the set before the next gets more expensive:
+    Two phases:
     1. fingerprint cosine (``_phase1_cosine``) — kills the giant hot-band
-       star pairs and the mass of near-parallel non-duplicates;
-    2. decimated-PCM sketch SNR from signatures, survivors only — kills
-       "fingerprint twins" without touching bytes (threshold is
-       ``snr_db_threshold - sketch_margin_db``: the sketch is an estimator);
-    3. full decoded-PCM pair SNR (the BASELINE.json per-row invariant) — the
-       authoritative check, now on a set bounded by the true duplicate count,
-       so audio bytes are only ever joined for rows that are almost certainly
-       duplicates.
+       star pairs and the mass of near-parallel non-duplicates without
+       touching audio bytes;
+    2. decoded-PCM pair SNR ≥ ``snr_db_threshold`` (the BASELINE.json
+       per-row invariant) on every phase-1 survivor — the authoritative
+       check; bytes are joined only for the survivors' ids.
 
     ``n_signatures`` is the driver-known signatures row count (the pipeline
     reads it from the warehouse manifest: parquet footer metadata, zero Spark
     jobs); it sizes phase 1's broadcast hint. Without it (standalone use) one
     ``signatures.count()`` runs."""
-    sketch_thr = cfg.snr_db_threshold - cfg.sketch_margin_db
-    phase1 = _phase1_cosine(pairs, signatures, cfg, n_signatures)
     # survivors are tiny (≈ true-dup count); materialize once EAGERLY — the
-    # phase-2 shrink semi-joins and the phase-3 broadcast builds reference
-    # this frame from CONCURRENT driver threads (BroadcastExchange builds run
-    # in parallel), and a LAZY checkpoint lets those threads race to compute
-    # the same partitions simultaneously: the bonus-window lazy variant
-    # measured 548 CPU-s cold for the isolated audio ladder at 200k vs
-    # 256 CPU-s eager (A/B, one session — the duplicated phase-1 work is
-    # exactly the cache race). Eager costs serial driver wall between phases
-    # but each phase computes once, which is also what a real cluster's
-    # coordinator should pay (r6; reverts the bonus-window eager=False).
-    cos_pass = phase1.localCheckpoint(eager=True)
+    # phase-2 ids-union broadcast build and the spread scan reference this
+    # frame from CONCURRENT driver threads (BroadcastExchange builds run in
+    # parallel), and a LAZY checkpoint lets those threads race to compute
+    # the same partitions simultaneously: a lazy variant measured 548 CPU-s
+    # cold for the isolated audio ladder at 200k vs 256 CPU-s eager (A/B,
+    # one session — the duplicated phase-1 work is exactly the cache race).
+    cos_pass = _phase1_cosine(pairs, signatures, cfg, n_signatures).localCheckpoint(
+        eager=True
+    )
 
-    # phase 2: decimated-PCM sketch SNR on the cosine survivors only — kills
-    # "fingerprint twins" (different clips whose spectra coincide) without
-    # ever touching audio bytes: their waveforms disagree, so sketch SNR ≈ 0.
-    # shrink=True: the sketch side is ~2 KB/row over the whole corpus — a
-    # fixed couple-hundred-MB shuffle if joined raw; semi-joined down to the
-    # survivor ids it broadcasts instead
-    sk_side = signatures.select("clip_id", "pcm_sketch")
-    withs = _attach(cos_pass, sk_side, {"pcm_sketch": "sa"}, "a")
-    withs = _attach(withs, sk_side, {"pcm_sketch": "sb"}, "b")
-
-    def sketch_filter(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            snr = batch_pair_snr_db(pdf["sa"].to_numpy(), pdf["sb"].to_numpy())
-            yield pdf.iloc[np.flatnonzero(snr >= sketch_thr)][
-                ["a", "b", "source", "cosine"]
-            ]
-
-    # eager for the same race reason as cos_pass: referenced by the phase-3
-    # ids-union broadcast build AND the spread scan, from parallel threads
-    survivors = withs.mapInPandas(sketch_filter, schema=PRE_SCHEMA).localCheckpoint(eager=True)
-
-    # phase 3: authoritative decoded-PCM SNR; bytes join only for survivors
-    # (spread again: the survivor frame is small in bytes but each row costs
-    # two full PCM decodes). r6: ONE clips scan — the two per-side semi-joins
-    # each re-scanned (and re-decoded) the whole clips parquet to fetch a few
-    # tens of thousands of rows (measured 7.3 s / 116 CPU-s of the stage at
-    # 200k); the union of both sides' ids is semi-joined once and the slim
-    # bytes frame is materialized for both attaches.
-    ids = survivors.select(
-        F.explode(F.array("a", "b")).alias("clip_id")
-    ).distinct()
+    # phase 2 (spread again: the survivor frame is small in bytes but each
+    # row costs two full PCM decodes). ONE clips scan: the union of both
+    # sides' ids is semi-joined once, and the slim bytes frame is
+    # materialized for both attaches.
+    ids = cos_pass.select(F.explode(F.array("a", "b")).alias("clip_id")).distinct()
     # eager: the two per-side attaches each build their own broadcast of this
     # frame in parallel driver threads — lazy blocks would make both threads
     # scan the clips parquet concurrently, re-paying the second full scan the
@@ -267,50 +219,30 @@ def verify_audio_pairs(
         .join(ids, "clip_id", "left_semi")
         .localCheckpoint(eager=True)
     )
-    withb = _attach(_spread(survivors), blobs, {"bytes": "ba", "codec": "ca"}, "a",
-                    shrink=False)
-    withb = _attach(withb, blobs, {"bytes": "bb", "codec": "cb"}, "b",
-                    shrink=False)
+    withb = _attach(_spread(cos_pass), blobs, {"bytes": "ba", "codec": "ca"}, "a")
+    withb = _attach(withb, blobs, {"bytes": "bb", "codec": "cb"}, "b")
     snr_thr = cfg.snr_db_threshold
-    slice_rows = max(1, cfg.verify_decode_slice_rows)
-
-    schema = StructType(
-        [
-            StructField("a", StringType(), False),
-            StructField("b", StringType(), False),
-            StructField("source", StringType(), False),
-            StructField("cosine", DoubleType(), False),
-            StructField("snr_db", DoubleType(), False),
-        ]
-    )
 
     def gen(batches):
-        empty = np.empty(0)
-        for full in batches:
-            # Re-chunk the Arrow batch: both sides decode to float64 PCM, so
-            # a full 2048-row batch peaks at ~1.5 GB of temps per worker (and
-            # the worker's arena keeps that high-water forever —
-            # cfg.verify_decode_slice_rows rationale). Slicing bounds the
-            # peak without changing any output row.
-            for start in range(0, len(full), slice_rows):
-                pdf = full.iloc[start : start + slice_rows]
-                if not len(pdf):
-                    continue
-                # decode is per-row (one frombuffer per blob — no per-sample
-                # Python); the SNR math is one vectorized batch pass. Symmetric
-                # min keeps the pair relation order-independent.
-                pas, pbs = [], []
-                for ba, ca, bb, cb in zip(pdf["ba"], pdf["ca"], pdf["bb"], pdf["cb"]):
-                    if ba is None or bb is None:
-                        pas.append(empty)
-                        pbs.append(empty)
-                        continue
-                    pas.append(decode_pcm16_wav(bytes(ba), codec=ca))
-                    pbs.append(decode_pcm16_wav(bytes(bb), codec=cb))
-                snrs = batch_pair_snr_db(pas, pbs)
-                keep = snrs >= snr_thr
-                out = pdf.loc[keep, ["a", "b", "source", "cosine"]].copy()
-                out["snr_db"] = np.clip(snrs[keep], -1e9, 1e9)
-                yield out
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            # one pair decoded and scored at a time: a worker never holds
+            # more than one pair's float64 PCM, whatever the batch's row
+            # count (and the worker's long-lived arena —
+            # config.tune_allocator_env — keeps whatever high-water it sees).
+            # Symmetric min keeps the pair relation order-independent.
+            snrs = np.full(len(pdf), -np.inf)
+            for i, (ba, ca, bb, cb) in enumerate(
+                zip(pdf["ba"], pdf["ca"], pdf["bb"], pdf["cb"])
+            ):
+                if ba is not None and bb is not None:
+                    pa = decode_pcm16_wav(bytes(ba), codec=ca)
+                    pb = decode_pcm16_wav(bytes(bb), codec=cb)
+                    snrs[i] = batch_pair_snr_db([pa], [pb])[0]
+            keep = snrs >= snr_thr
+            out = pdf.loc[keep, ["a", "b", "source", "cosine"]].copy()
+            out["snr_db"] = np.clip(snrs[keep], -1e9, 1e9)
+            yield out
 
-    return withb.mapInPandas(gen, schema=schema)
+    return withb.mapInPandas(gen, schema=AUDIO_SCHEMA)

@@ -215,8 +215,13 @@ def _sequential_dot(fa, fb) -> float:
 def test_phase1_cosine_matches_sequential_dot_reference(spark, tmp_path, monkeypatch):
     """Phase 1 keeps exactly the candidate pairs whose sequential float64
     fingerprint dot reaches ``cosine_threshold``, with that dot bit for bit
-    as the cosine, with and without the fp side's broadcast hint; the
-    verified rows carry the same value."""
+    as the cosine, with and without the fp side's broadcast hint. The
+    verified rows are exactly the phase-1 pairs whose driver-side SNR over
+    the decoded bytes reaches ``snr_db_threshold``, with that dot and that
+    SNR as their values."""
+    import numpy as np
+
+    from srpr_lsh_spark.kernels.audio import batch_pair_snr_db, decode_pcm16_wav
     from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH, combined_candidates
     from srpr_lsh_spark.operators.signatures import compute_signatures
     from srpr_lsh_spark.operators.verify import _phase1_cosine, verify_audio_pairs
@@ -241,11 +246,50 @@ def test_phase1_cosine_matches_sequential_dot_reference(spark, tmp_path, monkeyp
         return sorted(map(tuple, _phase1_cosine(cands, sigs, cfg).collect()))
 
     assert phase1() == want
+    pcm = {r["clip_id"]: decode_pcm16_wav(bytes(r["bytes"]), codec=r["codec"])
+           for r in clips.select("clip_id", "bytes", "codec").collect()}
+    snrs = {(a, b): float(np.clip(batch_pair_snr_db([pcm[a]], [pcm[b]])[0], -1e9, 1e9))
+            for a, b, _, _ in want}
+    want_verified = sorted((a, b, src, d, snrs[a, b]) for a, b, src, d in want
+                           if snrs[a, b] >= cfg.snr_db_threshold)
+    assert want_verified
     verified = verify_audio_pairs(cands, clips, sigs, cfg).collect()
-    assert verified
-    assert [r["cosine"] for r in verified] == [dots[r["a"], r["b"]] for r in verified]
+    assert sorted(map(tuple, verified)) == want_verified
     _zero_collect_budget(monkeypatch)
     assert phase1() == want
+
+
+def test_audio_verify_keeps_pair_with_noise_in_its_prefix(spark):
+    """The decoded-PCM SNR over the whole clip decides: a 2 s duplicate whose
+    noise sits in its first 0.5 s scores ~31 dB (≥ the 30 dB rule) and must
+    verify. A decimated sketch of the clip's first half second (1 ms stride,
+    512 points) would read ~25 dB on this pair, since all the noise falls
+    inside it — so no such estimator may stand between phase 1 and the SNR."""
+    import numpy as np
+
+    from srpr_lsh_spark.kernels.audio import encode_pcm16_wav
+    from srpr_lsh_spark.operators.banding import SOURCE_SIMHASH
+    from srpr_lsh_spark.operators.signatures import compute_signatures
+    from srpr_lsh_spark.operators.verify import verify_audio_pairs
+    from srpr_lsh_spark.sources.readers import clips_schema
+
+    sr = 16000
+    t = np.arange(2 * sr) / sr
+    x = 0.4 * np.sin(2 * np.pi * 523.0 * t) + 0.2 * np.sin(2 * np.pi * 1777.0 * t)
+    noise = np.zeros_like(x)
+    noise[: sr // 2] = np.random.default_rng(3).normal(size=sr // 2)
+    noise *= np.sqrt(np.mean(x * x) / np.mean(noise * noise) * 10 ** (-31 / 10))
+    rows = [
+        ("clean", bytearray(encode_pcm16_wav(x, sr)), sr, 2000, "pcm_s16le", "one"),
+        ("noisy", bytearray(encode_pcm16_wav(x + noise, sr)), sr, 2000, "pcm_s16le", "two"),
+    ]
+    clips = spark.createDataFrame(rows, clips_schema())
+    sigs = compute_signatures(clips, CFG)
+    pairs = spark.createDataFrame([("clean", "noisy", SOURCE_SIMHASH)],
+                                  "a string, b string, source string")
+    got = verify_audio_pairs(pairs, clips, sigs, CFG).collect()
+    assert [(r["a"], r["b"]) for r in got] == [("clean", "noisy")]
+    assert CFG.snr_db_threshold <= got[0]["snr_db"] < 32
 
 
 def test_text_verify_matches_jaccard_reference(spark, tmp_path):
@@ -561,7 +605,9 @@ def test_null_fields_survive_the_pipeline(spark, tmp_path):
       planted version of exactly this);
     - a NULL-transcript row with REAL audio still dedups against the same
       audio under a different transcript via the SimHash→SNR path;
-    - a NULL-bytes row with a unique transcript stays a singleton.
+    - a NULL-bytes row with a unique transcript stays a singleton;
+    - so does a row whose bytes cannot be decoded (a truncated WAV header,
+      an unknown codec): it has no audio, like NULL bytes.
     """
     import numpy as np
 
@@ -578,6 +624,10 @@ def test_null_fields_survive_the_pipeline(spark, tmp_path):
         ("nb_text", None, None, 500, None, "a unique transcript nothing shares"),
         ("allnull_1", None, None, None, None, None),
         ("allnull_2", None, None, None, None, None),
+        ("trunc_wav", bytearray(wav[:30]), 16000, 500, "pcm_s16le",
+         "a header cut short before the data chunk"),
+        ("bad_codec", bytearray(wav), 16000, 500, "opus",
+         "bytes in a codec this build cannot decode"),
     ]
     clips = spark.createDataFrame(rows, clips_schema())
     res = run_dedup(spark, clips, CFG, warehouse_dir=str(tmp_path / "wh"),
@@ -586,4 +636,6 @@ def test_null_fields_survive_the_pipeline(spark, tmp_path):
     assert set(got) == {r[0] for r in rows}          # every clip labeled
     assert got["allnull_1"] == got["allnull_2"]      # empty content = exact dup
     assert got["nt_audio"] == got["tr_audio"]        # same audio links sans text
-    assert got["nb_text"] not in (got["nt_audio"], got["allnull_1"])  # singleton
+    sizes = pd.Series(got).value_counts()
+    for cid in ("nb_text", "trunc_wav", "bad_codec"):             # singletons
+        assert sizes[got[cid]] == 1, cid

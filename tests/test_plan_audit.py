@@ -41,11 +41,17 @@ def test_candidates_exchanges_carry_no_audio_bytes(corpus):
     """Audio isolation: no Exchange of the candidates BUILD plan carries the
     ``bytes`` column. The warehouse frame is a checkpoint read-back (scan
     only), so compose the un-checkpointed signatures→banding plan: it starts
-    at the clips scan (bytes included) and must decode in the scan stage."""
+    at the clips scan (bytes included) and must decode in the scan stage.
+    That scan reads exactly the four columns the signatures kernel uses."""
     clips, _ = corpus
     sigs = compute_signatures(clips, CFG)
     cands = combined_candidates(sigs, CFG)
-    blocks = re.split(r"\n\n", _formatted(cands))
+    plan = _formatted(cands)
+    clip_scans = {s for s in re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+                  if "bytes:" in s}
+    assert clip_scans == {"clip_id:string,bytes:binary,codec:string,transcript:string"}, \
+        clip_scans
+    blocks = re.split(r"\n\n", plan)
     exch = [b for b in blocks
             if re.match(r"\(\d+\) (Exchange|BroadcastExchange)", b.strip())]
     assert exch
