@@ -6,45 +6,50 @@ table (the reference's ``vector<unordered_map<string, unordered_set<int>>>``,
 are rows sharing ``(band_id, band_hash)``; dedup across bands is a
 ``dropDuplicates`` (the reference's candidate-set union, ``src/lsh.h:36-43``).
 
+Plan: the band rows of both LSH spaces are hash-partitioned on the bucket key
+``(band_id, band_hash)``, one ``mapInArrow`` numpy kernel per partition
+(``bucket_pairs``) emits the pairs of every bucket it holds, and one
+``dropDuplicates`` merges the partitions — two shuffles, no join.
+
 Skew design (SURVEY.md §4.3.2) — a naive self-join is O(|bucket|²), fatal for
 hot bands (near-identical mass content, zero fingerprints):
-- bucket sizes come from a map-side-combinable ``groupBy().count()`` first;
-- buckets ≤ ``bucket_pair_cap`` expand all pairs from a per-bucket sorted
-  member array (one ``collect_list`` shuffle, bounded by the cap, with the
-  pair combinations generated in codegen — r6: replaces the former two-sided
-  bucket self-join, one exchange + two sorts fewer per pass, guide §2.4);
-- larger buckets emit STAR pairs to TWO anchors (every member ↔ the bucket's
-  min clip_id AND ↔ its max clip_id): O(n) edges. Recall preservation here is
-  a high-probability heuristic, not a guarantee — a member whose similarity
-  to BOTH anchors falls below the verify threshold (while passing against
-  other members) is stranded. Two forces make that rare in practice: the
-  full-signature collapse (``_space_parts``) guarantees capped buckets
-  contain only DISTINCT signatures, and a true near-dup family inside one
-  bucket tends to be mutually similar, so two independent anchors give two
-  chances to attach. The residual gap is measured, not assumed:
-  tests/test_components.py plants an adversarial over-cap bucket whose min
-  anchor is dissimilar to half the members.
-- AQE skew-join splitting handles residual imbalance in the join itself.
+- full-signature collapse: each band row carries ``sh``, the hash of its
+  space's FULL signature. Identical signatures give identical band keys, so a
+  whole ``sh`` group always lands in the same buckets, where the kernel
+  collapses it to its min clip_id (star edges rep ↔ member) before pairing.
+  A signature family of m rows costs m star edges instead of O(L·m²) bucket
+  pairs, and capped buckets contain only DISTINCT signatures, so the over-cap
+  regime can never strand a family whose members share a signature;
+- buckets with ≤ ``bucket_pair_cap`` distinct signatures emit every a < b pair
+  of their representatives;
+- larger buckets emit STAR pairs to TWO anchors (every representative ↔ the
+  bucket's min clip_id AND ↔ its max clip_id): O(n) edges. Recall
+  preservation here is a high-probability heuristic, not a guarantee — a
+  member whose similarity to BOTH anchors falls below the verify threshold
+  (while passing against other members) is stranded. The collapse above and
+  the mutual similarity of a true near-dup family make that rare; the
+  residual gap is measured, not assumed: tests/test_components.py plants an
+  adversarial over-cap bucket whose min anchor is dissimilar to half the
+  members.
+- memory: a bucket is never split, so one task holds at least its largest
+  bucket's band rows (twin rows included — their mass collapses inside that
+  task, not before the shuffle).
 
-Id encoding (r6, guide §2.3 "narrower types" / r5 VERDICT next-round #2):
-the banding/pair subgraph shuffles tens of rows per clip, so
-``combined_candidates`` first dictionary-encodes ``clip_id`` strings to dense
-int64 via ``build_id_map`` (the SURVEY §2.3 id-remap operator; reference
-analogue ``src/DataManager.h:79-105``), runs the whole explode → sizes → pair
-→ dedup pipeline on int64, and maps back to strings only for the final (much
-smaller) deduped pair frame. The encoding is ORDER-PRESERVING (dense rank of
-the sorted ids), so min/max anchor choice, collapse representatives and the
-a < b pair canonicalization are exactly the string-order decisions — the
-decoded output is row-identical to the pre-r6 string plan (pytest-pinned).
-Min/max/groupBy on int64 also run as
-HashAggregate instead of the SortAggregate that string min/max forces.
+Ids: the kernel numbers a partition's ids in string order
+(``pd.factorize(sort=True)``, as ``components.star_forest`` does), so every
+min/max anchor, collapse representative and a < b decision is the string-order
+decision; the pairs leave the kernel as the input id type.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
-from pyspark.sql import DataFrame, Window, functions as F
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from srpr_lsh_spark.config import SRP_BAND_OFFSET, DedupConfig
 
@@ -53,71 +58,8 @@ SOURCE_MINHASH = "minhash"
 SOURCE_SIMHASH = "simhash"
 
 
-def build_id_map(signatures: DataFrame, n_parts: "int | None" = None) -> DataFrame:
-    """``(clip_id string, cid long)`` dense ORDER-PRESERVING dictionary.
-
-    cid = rank of clip_id in the sorted id set — fully deterministic given the
-    id set, so every decision made on cid order (min-anchor, a < b) decodes to
-    the identical string-order decision. Built scalably: range-partition the
-    ids, per-partition ``row_number`` plus the partition's cumulative offset
-    (computed with a window over the tiny per-partition-count frame — no
-    driver collect, no single-partition sort of the data).
-
-    Both checkpoints are EAGER (r6): ``parts`` is referenced by the counts
-    aggregate and the offsets join, and the returned map by the encode join
-    plus two decode joins — several of those subtrees are built by parallel
-    broadcast/stage threads, and a lazy checkpoint lets them race to compute
-    the same partitions (A/B at 200k: the candidates stage dropped 578 → 307
-    CPU-s cold with eager checkpoints through this subgraph). Eagerness is
-    also what guarantees the sampled range boundaries (and so
-    ``spark_partition_id``) are evaluated exactly once."""
-    spark = signatures.sparkSession
-    n_parts = n_parts or spark.sparkContext.defaultParallelism
-    parts = (
-        signatures.select("clip_id")
-        .repartitionByRange(n_parts, "clip_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    counts = parts.groupBy("pid").agg(F.count("*").alias("n"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.select(
-        "pid", F.coalesce(F.sum("n").over(w_off), F.lit(0)).alias("off")
-    )
-    w_rn = Window.partitionBy("pid").orderBy("clip_id")
-    return (
-        parts.join(F.broadcast(offs), "pid")
-        .select(
-            "clip_id",
-            (F.row_number().over(w_rn) - 1 + F.col("off")).cast("long").alias("cid"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-
-def _encode(signatures: DataFrame, id_map: DataFrame) -> DataFrame:
-    """signatures with ``clip_id`` replaced by its int64 ``cid`` (same column
-    name, so the banding operators below are id-type-agnostic)."""
-    return (
-        signatures.join(id_map, "clip_id")
-        .drop("clip_id")
-        .withColumnRenamed("cid", "clip_id")
-    )
-
-
-def _decode_pairs(pairs: DataFrame, id_map: DataFrame) -> DataFrame:
-    """(a cid, b cid, source) → (a, b, source) strings via two map joins."""
-    am = id_map.select(F.col("cid").alias("a"), F.col("clip_id").alias("_a"))
-    bm = id_map.select(F.col("cid").alias("b"), F.col("clip_id").alias("_b"))
-    return (
-        pairs.join(am, "a")
-        .join(bm, "b")
-        .select(F.col("_a").alias("a"), F.col("_b").alias("b"), "source")
-    )
-
-
-def _band_rows(df: DataFrame, source: str) -> DataFrame:
-    """One LSH space's ``(clip_id, band_id, band_hash)`` rows, on the
+def _band_rows(df: DataFrame, source: str, *keep: str) -> DataFrame:
+    """One LSH space's ``(clip_id, *keep, band_id, band_hash)`` rows, on the
     band-id layout: MinHash band i at i, SRP table t at SRP_BAND_OFFSET + t.
 
     Empty-transcript rows (band key sentinel -1) are excluded from the MinHash
@@ -126,13 +68,13 @@ def _band_rows(df: DataFrame, source: str) -> DataFrame:
     are the planted hot band the cap must absorb."""
     if source == SOURCE_MINHASH:
         return df.select(
-            "clip_id", F.posexplode("band_keys").alias("band_id", "band_hash")
+            "clip_id", *keep, F.posexplode("band_keys").alias("band_id", "band_hash")
         ).filter(F.col("band_hash") != F.lit(-1))
     if source == SOURCE_SIMHASH:
         return df.select(
-            "clip_id", F.posexplode("sim_keys").alias("t", "band_hash")
+            "clip_id", *keep, F.posexplode("sim_keys").alias("t", "band_hash")
         ).select(
-            "clip_id",
+            "clip_id", *keep,
             (F.col("t") + F.lit(SRP_BAND_OFFSET)).alias("band_id"),
             "band_hash",
         )
@@ -147,144 +89,134 @@ def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def _source_of_band() -> "F.Column":
-    """``source`` is fully determined by the band id (MinHash bands occupy
-    [0, SRP_BAND_OFFSET); SRP tables sit above it — the band-id layout
-    invariant ``DedupConfig.__post_init__`` asserts), so band rows don't
-    need to CARRY the string: deriving it at pair-emit time drops ~40% of
-    every band row's bytes through the sizes/collect_list shuffles and
-    halves the per-member struct in the bucket arrays (r6, guide §2.3
-    "shuffle fewer bytes"). All rows of one bucket share ``band_id``, so
-    this is exactly the former "pair keeps a's source" value."""
+    """``source`` is fully determined by the band id: MinHash bands occupy
+    [0, SRP_BAND_OFFSET) and SRP tables sit above it (the band-id layout
+    invariant ``DedupConfig.__post_init__`` asserts), so band rows need not
+    carry the string. ``bucket_pairs`` applies the same rule in numpy."""
     return F.when(
         F.col("band_id") < F.lit(SRP_BAND_OFFSET), F.lit(SOURCE_MINHASH)
     ).otherwise(F.lit(SOURCE_SIMHASH))
 
 
+def bucket_pairs(rows: pa.Table, cap: int) -> pa.RecordBatch:
+    """The pair kernel: ``rows(clip_id, sh, band_id, band_hash)`` → the
+    distinct ``(a, b, source)`` pairs, a < b, of every bucket in ``rows``.
+
+    Inside each ``(band_id, band_hash)`` bucket, rows sharing ``sh`` collapse
+    to their min id (star edges rep → member); a row with NULL ``sh`` is its
+    own group. A bucket with 2..``cap`` representatives emits all their
+    pairs, a larger one the two-anchor star (every representative with the
+    min and with the max). ``rows`` must hold whole buckets."""
+    ids = rows.column("clip_id")
+    code, uniq = pd.factorize(ids.to_numpy(zero_copy_only=False), sort=True)
+    sh = rows.column("sh")
+    own = sh.is_null().to_numpy(zero_copy_only=False)
+    key = np.where(own, code, sh.fill_null(0).to_numpy())
+    bid = rows.column("band_id").to_numpy()
+    bh = rows.column("band_hash").to_numpy()
+    # by bucket, then group, then id: each group's first row is its min id
+    o = np.lexsort((code, key, own, bh, bid))
+    code, key, own, bid, bh = code[o], key[o], own[o], bid[o], bh[o]
+
+    new_bucket = np.r_[True, (bid[1:] != bid[:-1]) | (bh[1:] != bh[:-1])]
+    first = np.flatnonzero(
+        new_bucket | np.r_[True, (key[1:] != key[:-1]) | (own[1:] != own[:-1])])
+    rep = np.repeat(code[first], np.diff(np.r_[first, len(code)]))
+    a, b, band = [rep], [code], [bid]
+
+    # one row per group, re-sorted by id inside its bucket
+    bucket = np.cumsum(new_bucket)[first]
+    o = np.lexsort((code[first], bucket))
+    r, rb, bucket = code[first][o], bid[first][o], bucket[o]
+    start = np.flatnonzero(np.r_[True, bucket[1:] != bucket[:-1]])
+    size = np.diff(np.r_[start, len(r)])
+    for s in np.unique(size[(size >= 2) & (size <= cap)]):
+        st = start[size == s][:, None]
+        i, j = np.triu_indices(s, 1)
+        a.append(r[st + i].ravel())
+        b.append(r[st + j].ravel())
+        band.append(np.repeat(rb[st[:, 0]], len(i)))
+    big = size > cap
+    if big.any():
+        n = size[big]
+        member = np.arange(n.sum()) + np.repeat(start[big] - (np.cumsum(n) - n), n)
+        lo, hi = np.repeat(r[start[big]], n), np.repeat(r[start[big] + n - 1], n)
+        a += [lo, r[member]]
+        b += [r[member], hi]
+        band += [rb[member]] * 2
+
+    a, b = np.concatenate(a), np.concatenate(b)
+    simhash = np.concatenate(band) >= SRP_BAND_OFFSET
+    # (a, b, source) packed into one int64: drops the star edges each band
+    # repeats and the self edges in one unique
+    k = np.unique(((a * len(uniq) + b) * 2 + simhash)[a < b])
+    a, b = np.divmod(k // 2, len(uniq))
+    uniq = pa.array(uniq, type=ids.type)
+    return pa.RecordBatch.from_arrays(
+        [uniq.take(a), uniq.take(b),
+         pa.array(np.array([SOURCE_MINHASH, SOURCE_SIMHASH], dtype=object)[k % 2],
+                  type=pa.string())],
+        names=["a", "b", "source"],
+    )
+
+
+def _pair_partition(batches, cap: int):
+    """``mapInArrow`` body: a bucket can span Arrow batches, so the kernel
+    runs once over all of the partition's rows."""
+    batches = [rb for rb in batches if rb.num_rows]
+    if batches:
+        yield bucket_pairs(pa.Table.from_batches(batches), cap)
+
+
 def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """bands(clip_id, band_id, band_hash) → candidate_pairs(a, b, source)
-    with a < b, distinct; ``source`` derived from the band-id layout
+    """bands(clip_id, [sh,] band_id, band_hash) → candidate_pairs(a, b,
+    source) with a < b, distinct; ``source`` derived from the band-id layout
     (``_source_of_band``) — an attached source column, if present, is
-    ignored. Two-regime plan keyed by bucket size (see module docstring).
-    Id-type agnostic: works identically on string clip_ids (tests,
-    explode_bands callers) and the int64-encoded pipeline path.
-    """
-    key = ["band_id", "band_hash"]
-    bands = bands.select("clip_id", *key)
-    sizes = bands.groupBy(*key).agg(F.count("*").alias("bsz")).filter(F.col("bsz") >= 2)
-    tagged = bands.join(sizes, key)  # buckets of size 1 drop out here
-
-    small = tagged.filter(F.col("bsz") <= cfg.bucket_pair_cap)
-    big = tagged.filter(F.col("bsz") > cfg.bucket_pair_cap)
-
-    # capped buckets: ONE groupBy into a sorted member array (bounded by the
-    # cap), then emit every a < b combination in codegen — the former
-    # two-sided self-join shuffled both projections and sorted each for an
-    # SMJ; this shuffles the member rows once (guide §2.4).
-    grouped = small.groupBy(*key).agg(
-        F.sort_array(F.collect_list("clip_id")).alias("ms")
-    )
-    combos = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ms"), i + F.lit(2), F.size(F.col("ms"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    small_pairs = (
-        grouped.select(_source_of_band().alias("source"), F.explode(combos).alias("p"))
-        .select("p.a", "p.b", "source")
-        .filter(F.col("a") < F.col("b"))
+    ignored. Without ``sh`` every row is its own collapse group. Id-type
+    agnostic: ``a``/``b`` have ``clip_id``'s type. See the module docstring
+    for the plan."""
+    if "sh" not in bands.columns:
+        bands = bands.withColumn("sh", F.lit(None).cast("long"))
+    rows = bands.select("clip_id", "sh", "band_id", "band_hash")
+    id_type = rows.schema["clip_id"].dataType
+    schema = StructType([
+        StructField("a", id_type), StructField("b", id_type),
+        StructField("source", StringType()),
+    ])
+    return (
+        rows.repartition("band_id", "band_hash")
+        .mapInArrow(partial(_pair_partition, cap=cfg.bucket_pair_cap), schema)
+        .dropDuplicates(["a", "b", "source"])
     )
 
-    # two-anchor star: min AND max clip_id — still O(n) edges per bucket, but
-    # a member dissimilar to one anchor gets a second independent chance to
-    # attach before exact verification (see module docstring)
-    reps = big.groupBy(*key).agg(
-        F.min("clip_id").alias("lo"), F.max("clip_id").alias("hi")
-    )
-    joined = big.join(reps, key).withColumn("source", _source_of_band())
-    lo_pairs = joined.filter(F.col("clip_id") != F.col("lo")).select(
-        F.col("lo").alias("a"), F.col("clip_id").alias("b"), "source"
-    )
-    hi_pairs = joined.filter(F.col("clip_id") != F.col("hi")).select(
-        F.col("clip_id").alias("a"), F.col("hi").alias("b"), "source"
-    )
-    star_pairs = lo_pairs.unionByName(hi_pairs)
 
-    return small_pairs.unionByName(star_pairs).dropDuplicates(["a", "b", "source"])
-
-
-def _space_parts(signatures: DataFrame, source: str):
-    """(within-collapse star edges, banded rep rows) for one LSH space, with
-    an exact-signature collapse.
-
-    Rows whose FULL signature is identical (all minhash components / all SRP
-    table keys) are collapsed to their min-clip_id representative BEFORE
-    banding: members link to the rep with O(n) star edges, and only reps
-    enter the band explode + bucket join. Two effects at scale:
-
-    - twin-heavy corpora (mass-duplicated content, silent audio) stop
-      multiplying the same pair set across every band/table — a signature
-      family of m rows costs m star edges instead of O(L·m²) bucket pairs;
-    - capped hot buckets contain only DISTINCT signatures, so the over-cap
-      star regime can no longer strand a duplicate family whose members were
-      capped away from each other (they share a full signature and are
-      already star-linked).
-
-    All emitted edges (star and bucket) still pass exact verification, so
-    this changes cost, never correctness of the final clusters."""
+def _keyed_bands(signatures: DataFrame, source: str) -> DataFrame:
+    """One LSH space's band rows, each carrying ``sh``, the hash of the row's
+    FULL signature in that space (all minhash components / all SRP table
+    keys) — the key of the kernel's in-bucket collapse."""
     if source == SOURCE_MINHASH:
         eligible = signatures.filter(F.col("n_shingles") > 0)
-        sig_hash = F.xxhash64("minhash")
+        sh = F.xxhash64("minhash")
     elif source == SOURCE_SIMHASH:
-        eligible = signatures
-        sig_hash = F.xxhash64("sim_keys")
+        eligible, sh = signatures, F.xxhash64("sim_keys")
     else:
         raise ValueError(source)
-
-    keyed = eligible.select("clip_id", sig_hash.alias("sh"))
-    reps = keyed.groupBy("sh").agg(F.min("clip_id").alias("rep"))
-    within = (
-        keyed.join(reps, "sh")
-        .filter(F.col("clip_id") != F.col("rep"))
-        .select(F.col("rep").alias("a"), F.col("clip_id").alias("b"),
-                F.lit(source).alias("source"))
-    )
-    rep_rows = eligible.join(
-        reps.select(F.col("rep").alias("clip_id")), "clip_id", "left_semi"
-    )
-    # band rows carry NO source string: candidate_pairs derives it from the
-    # band-id layout (_source_of_band), so the sizes/collect_list shuffles
-    # move (id, band_id, hash) only
-    return within, _band_rows(rep_rows, source)
+    return _band_rows(eligible.withColumn("sh", sh), source, "sh")
 
 
 def combined_candidates(
     signatures: DataFrame, cfg: DedupConfig,
     sources: "tuple[str, ...]" = (SOURCE_MINHASH, SOURCE_SIMHASH),
 ) -> DataFrame:
-    """Candidate pairs of the given LSH spaces through ONE bucket-join pass
-    (r5 stage-count cut).
+    """Candidate pairs of the given LSH spaces through ONE bucket shuffle.
 
     With both spaces it is row-identical to the union of the one-space calls
     (pytest-pinned): the band-id key spaces are disjoint ([0, bands) vs
-    SRP_BAND_OFFSET+table), so buckets never mix across spaces and per-space
-    bucket sizes are unchanged; ``source`` rides along and ``dropDuplicates``
-    includes it, so no cross-space dedup happens either. The win is plan
-    shape, not rows — one sizes groupBy, one tagged join, one pair
-    deduplication instead of two of each, roughly halving the candidates
-    stage's shuffle-stage count, which is the corpus-size-independent
-    scheduling floor the scaling studies keep measuring (VERDICT r4 #1).
-
-    r6: the whole pass runs on int64-encoded ids (module docstring); only the
-    final deduped pair frame is mapped back to strings."""
-    id_map = build_id_map(signatures)
-    enc = _encode(signatures, id_map)
-    withins, bands = zip(*(_space_parts(enc, s) for s in sources))
-    pairs = candidate_pairs(reduce(DataFrame.unionByName, bands), cfg)
-    return _decode_pairs(reduce(DataFrame.unionByName, withins, pairs), id_map)
+    SRP_BAND_OFFSET+table), so buckets never mix across spaces, and
+    ``source`` is part of the dedup key. Builds a lazy plan: no job runs
+    until the result is consumed."""
+    bands = reduce(DataFrame.unionByName, (_keyed_bands(signatures, s) for s in sources))
+    return candidate_pairs(bands, cfg)
 
 
 def exact_content_edges(signatures: DataFrame) -> DataFrame:

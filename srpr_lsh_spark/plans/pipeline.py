@@ -192,24 +192,13 @@ def _run_dedup(
     n_sigs = _m_sig.get("rows") if _m_sig else None
 
     def build_candidates() -> DataFrame:
-        # both LSH spaces in ONE bucket-join pass (row-identical to the
-        # per-space union, pytest-pinned; halves the stage's shuffle count).
-        # The two subgraphs' eager prologues (id-map build jobs / containment
-        # index checkpoint) are independent — build them from TWO driver
-        # threads so their jobs overlap and backfill each other's stage tails
-        # (guide §2.6) instead of running as a serial prologue chain. Same
-        # frames, same union, same rows.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_lsh = pool.submit(combined_candidates, sigs, cfg)
-            f_sub = pool.submit(containment_candidates, clips, sigs, cfg, n_sigs)
-            lsh = f_lsh.result()
-            sub = f_sub.result().select(
-                F.col("short").alias("a"), F.col("long").alias("b"),
-                F.lit("substr").alias("source"),
-            )
-        return lsh.unionByName(sub)
+        # both LSH spaces in ONE bucket shuffle (row-identical to the
+        # per-space union, pytest-pinned)
+        sub = containment_candidates(clips, sigs, cfg, n_sigs).select(
+            F.col("short").alias("a"), F.col("long").alias("b"),
+            F.lit("substr").alias("source"),
+        )
+        return combined_candidates(sigs, cfg).unionByName(sub)
 
     cands, sk = wh.stage("candidates", build_candidates)
     note("candidates", sk)

@@ -146,6 +146,83 @@ def test_star_forest_matches_union_find():
         assert got == _uf_oracle(seen, list(zip(a, b))), trial
 
 
+def _bucket_groups(rows):
+    """``{(band_id, band_hash): {group: [ids]}}``; a row without ``sh`` is
+    its own group."""
+    buckets = {}
+    for cid, sh, bid, bh in rows:
+        group = ("id", cid) if sh is None else ("sh", sh)
+        buckets.setdefault((bid, bh), {}).setdefault(group, []).append(cid)
+    return buckets
+
+
+def _bucket_pairs_reference(rows, cap):
+    """Plain-Python pair kernel: per bucket, collapse identical ``sh`` to the
+    min id, then all pairs of the group reps, or the two-anchor star when
+    there are more than ``cap``."""
+    from srpr_lsh_spark.config import SRP_BAND_OFFSET
+
+    out = set()
+    for (bid, _), groups in _bucket_groups(rows).items():
+        src = "minhash" if bid < SRP_BAND_OFFSET else "simhash"
+        for g in groups.values():
+            out |= {(min(g), m, src) for m in g if m != min(g)}
+        reps = sorted(min(g) for g in groups.values())
+        if len(reps) <= cap:
+            out |= {(a, b, src) for i, a in enumerate(reps) for b in reps[i + 1:]}
+        else:
+            out |= {(reps[0], m, src) for m in reps[1:]}
+            out |= {(m, reps[-1], src) for m in reps[:-1]}
+    return out
+
+
+def test_bucket_pairs_matches_reference():
+    """The numpy pair kernel against the plain-Python reference on random
+    band layouts, which cover buckets of 1, cap and cap + 1 groups,
+    multi-member ``sh`` groups in over-cap buckets, both band-id spaces and
+    rows with and without ``sh``."""
+    import pyarrow as pa
+
+    from srpr_lsh_spark.config import SRP_BAND_OFFSET
+    from srpr_lsh_spark.operators.banding import bucket_pairs
+
+    rng = np.random.default_rng(7)
+    seen = set()
+    for trial in range(50):
+        cap = int(rng.integers(2, 7))
+        n = int(rng.integers(1, 40))
+        ids = [f"k{i}" for i in rng.permutation(n)]
+        sh = [int(s) if rng.random() < 0.6 and trial % 3 else None
+              for s in rng.integers(0, n // 3 + 1, n)]
+        band_ids = rng.choice([0, 1, SRP_BAND_OFFSET, SRP_BAND_OFFSET + 3],
+                              size=int(rng.integers(1, 4)), replace=False)
+        rows = []
+        for cid, s in zip(ids, sh):
+            for bid in band_ids:
+                # identical full signatures share every band key
+                h = hash((s, int(bid))) % 3 if s is not None else int(rng.integers(0, 3))
+                rows.append((cid, s, int(bid), h - 1))
+        rows = [rows[i] for i in rng.permutation(len(rows))]
+        table = pa.table({
+            "clip_id": pa.array([r[0] for r in rows], pa.string()),
+            "sh": pa.array([r[1] for r in rows], pa.int64()),
+            "band_id": pa.array([r[2] for r in rows], pa.int32()),
+            "band_hash": pa.array([r[3] for r in rows], pa.int64()),
+        })
+        got = list(zip(*bucket_pairs(table, cap).to_pydict().values()))
+        assert len(got) == len(set(got)), trial
+        assert set(got) == _bucket_pairs_reference(rows, cap), trial
+
+        for (bid, _), groups in _bucket_groups(rows).items():
+            seen.add({1: "size 1", cap: "size cap", cap + 1: "size cap+1"}.get(len(groups)))
+            seen.add("srp" if bid >= SRP_BAND_OFFSET else "minhash")
+            if len(groups) > cap and max(map(len, groups.values())) > 1:
+                seen.add("over-cap sh group")
+        seen |= {"sh" if s is not None else "no sh" for s in sh}
+    assert seen >= {"size 1", "size cap", "size cap+1", "over-cap sh group",
+                    "minhash", "srp", "sh", "no sh"}, seen
+
+
 class TestOverCapStarBucket:
     """Adversarial hot-bucket fixture: a >cap bucket whose MIN anchor is
     dissimilar to every true member. With single-anchor star pairing the

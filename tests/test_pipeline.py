@@ -594,6 +594,39 @@ def test_combined_candidates_row_identical_to_per_space(spark, tmp_path):
     assert rows(combined_candidates(sigs, CFG)) == want
 
 
+def test_combined_candidates_independent_of_partition_shape(spark, tmp_path):
+    """The pair kernel groups per partition, not per Arrow batch: with
+    3-row input batches, one or seven (uncoalesced) bucket partitions give
+    the rows of the default layout."""
+    from srpr_lsh_spark.operators.banding import combined_candidates
+    from srpr_lsh_spark.operators.signatures import compute_signatures
+
+    params = SynthParams(n_clips=200, block_size=100, seed=47,
+                         min_dur_ms=300, max_dur_ms=900)
+    clips, _ = synthesize_clips(spark, params, out_dir=str(tmp_path / "d"))
+    sigs = compute_signatures(clips, CFG).localCheckpoint(eager=True)
+    rows = lambda: sorted(map(tuple, combined_candidates(sigs, CFG).collect()))
+    want = rows()
+    assert any(s == "minhash" for _, _, s in want)
+    assert any(s == "simhash" for _, _, s in want)
+
+    keys = ("spark.sql.execution.arrow.maxRecordsPerBatch",
+            "spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for parts in ("1", "7"):
+            for k, v in zip(keys, ("3", parts, "false")):
+                spark.conf.set(k, v)
+            assert rows() == want, parts
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_null_fields_survive_the_pipeline(spark, tmp_path):
     """Rows a 10^12-clip corpus will certainly contain — NULL transcript,
     NULL bytes, NULL sr_hz, all-NULL payload — must flow through every stage

@@ -103,3 +103,20 @@ def test_verify_phase1_broadcasts_fp_side(spark, corpus, monkeypatch):
     assert fp_scans == {"struct<clip_id:string,fp:array<float>>"}, fp_scans
     assert hints.count("strategy=broadcast") == 2, hints
     assert "strategy=broadcast" not in bare_hints, bare_hints
+
+
+def test_candidates_plan_is_one_bucket_shuffle(corpus):
+    """The LSH candidates plan is the band rows' bucket shuffle, the pair
+    kernel and the pair dedup: exactly two shuffles, no broadcast, no join
+    and no checkpoint read-back, so it adds no job beyond its own stages."""
+    clips, _ = corpus
+    plan = _formatted(combined_candidates(compute_signatures(clips, CFG), CFG))
+    blocks = [b.strip() for b in re.split(r"\n\n", plan)]
+    ops = [m.group(1) for b in blocks if (m := re.match(r"\(\d+\) (\w+)", b))]
+    shuffles = [b for b in blocks if re.match(r"\(\d+\) Exchange\b", b)]
+    assert len(shuffles) == 2, ops
+    assert sum(bool(re.search(r"hashpartitioning\(band_id#\d+L?, band_hash#\d+L?, ", b))
+               for b in shuffles) == 1, shuffles
+    assert "BroadcastExchange" not in ops, ops
+    assert not [op for op in ops if "Join" in op], ops
+    assert "ExistingRDD" not in plan, ops
