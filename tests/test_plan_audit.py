@@ -1,4 +1,4 @@
-"""The dedup half of the PLANS.md physical-plan audit (checks 4–6).
+"""The dedup half of the PLANS.md physical-plan audit (checks 4–7).
 
 Each check inspects the planned physical plan of the same frame PLANS.md
 documents, on a small synthetic clips corpus read back from parquet so scans
