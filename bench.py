@@ -138,11 +138,10 @@ def _session(cpus: int, shuffle_partitions: "int | None" = None,
         # shuffles. At 200k clips the fingerprint side (~100 MB) once crossed
         # the old 128m threshold and the phase-1 attach joins silently flipped
         # to sort-merge (the verify stage ANTI-scaled, 0.8× at 4× cores).
-        # Phase 1's fp side and containment's sketch-hash union now carry a
-        # broadcast hint while they fit spark.driver.maxResultSize
-        # (operators/verify.py::fits_collect_budget), so that cliff no longer
-        # depends on this setting; 512m keeps the other narrow join sides
-        # broadcast at bench scales.
+        # Phase 1's fp side now carries a broadcast hint while it fits
+        # spark.driver.maxResultSize (operators/verify.py::fits_collect_budget),
+        # so that cliff no longer depends on this setting; 512m keeps the
+        # other narrow join sides broadcast at bench scales.
         .config("spark.sql.autoBroadcastJoinThreshold", "512m")
         # isolated mode keeps the TOTAL footprint small: this host's reclaim
         # daemon starts fault-storming around ~60 GB resident (VARIANCE.md

@@ -160,12 +160,13 @@ def bucket_pairs(rows: pa.Table, cap: int) -> pa.RecordBatch:
     )
 
 
-def _pair_partition(batches, cap: int):
-    """``mapInArrow`` body: a bucket can span Arrow batches, so the kernel
-    runs once over all of the partition's rows."""
+def whole_partition(batches, kernel):
+    """``mapInArrow`` body: a shuffle key's rows (a bucket, a hash, a short)
+    can span Arrow batches, so ``kernel`` runs once over all of the
+    partition's rows, as one ``pa.Table``."""
     batches = [rb for rb in batches if rb.num_rows]
     if batches:
-        yield bucket_pairs(pa.Table.from_batches(batches), cap)
+        yield kernel(pa.Table.from_batches(batches))
 
 
 def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -185,7 +186,8 @@ def candidate_pairs(bands: DataFrame, cfg: DedupConfig) -> DataFrame:
     ])
     return (
         rows.repartition("band_id", "band_hash")
-        .mapInArrow(partial(_pair_partition, cap=cfg.bucket_pair_cap), schema)
+        .mapInArrow(partial(whole_partition, kernel=partial(
+            bucket_pairs, cap=cfg.bucket_pair_cap)), schema)
         .dropDuplicates(["a", "b", "source"])
     )
 

@@ -135,14 +135,16 @@ def compute_signatures(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def shingle_sets(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """clips → (clip_id, hs): each transcript's sorted-unique k-shingle
-    hashes, from ONE kernel pass over the slim (clip_id, transcript)
-    projection. The per-clip shingle frame behind the containment index."""
+    """clips → (clip_id, hs, tr_len): each transcript's sorted-unique
+    k-shingle hashes and normalized length (as ``compute_signatures``), from
+    ONE kernel pass over the slim (clip_id, transcript) projection. The
+    posting side of containment candidates."""
     k, seed = cfg.k_shingle, cfg.seed
     schema = StructType(
         [
             StructField("clip_id", StringType(), False),
             StructField("hs", ArrayType(LongType(), False), False),
+            StructField("tr_len", IntegerType(), False),
         ]
     )
 
@@ -157,6 +159,7 @@ def shingle_sets(clips: DataFrame, cfg: DedupConfig) -> DataFrame:
                 {
                     "clip_id": pdf["clip_id"].astype(str),
                     "hs": [flat_i[off[i] : off[i + 1]] for i in range(len(texts))],
+                    "tr_len": np.array([len(t) for t in texts], dtype=np.int32),
                 }
             )
 

@@ -4,14 +4,11 @@ Containment is invisible to plain MinHash banding when the length ratio is
 small (Jaccard of a 40% substring is ≈ 0.4 — below band sensitivity), so this
 pass has its own candidate generator:
 
-- candidates: the contained side's **bottom-k shingle sketch** is matched
-  against an inverted index of the shingle hashes (every shingle of a
-  contained transcript occurs in its container, so all sketch hashes must
-  hit). The index comes from one shingle pass (``shingle_sets``) and keeps
-  only hashes that occur in some sketch; each hash's document frequency is
-  its row count there. Sketch hashes occurring in more than
-  ``hot_shingle_cap`` clips are dropped (prefix-filtering-style stopword cut)
-  to bound join fan-out.
+- candidates: every shingle of a contained transcript occurs in its
+  container, so the contained side's **bottom-k shingle sketch** must hit
+  the container's shingle set. Two shuffles, two numpy kernels (see
+  ``containment_candidates``); hashes held by more than ``hot_shingle_cap``
+  clips are cut (a prefix-filtering-style stopword cut).
 - verification: per container group, ONE suffix array of the container's
   normalized transcript is built and each candidate substring is binary-
   searched (``kernels.text.suffix_array`` / ``sa_contains``) — exact, no
@@ -20,119 +17,117 @@ pass has its own candidate generator:
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from srpr_lsh_spark.config import DedupConfig
 from srpr_lsh_spark.kernels.text import normalize_transcript, sa_contains, suffix_array
+from srpr_lsh_spark.operators.banding import whole_partition
 from srpr_lsh_spark.operators.signatures import shingle_sets
-from srpr_lsh_spark.operators.verify import fits_collect_budget
-
-# broadcast bytes per distinct sketch hash in the union's hashed relation
-# (h long plus build-side overhead); a signature row holds at most bottom_k
-UNION_HASH_BYTES = 16
 
 
-def containment_candidates(
-    clips: DataFrame, signatures: DataFrame, cfg: DedupConfig,
-    n_signatures: "int | None" = None,
-) -> DataFrame:
-    """→ (short, long) candidate containment pairs.
+def sketch_hits(rows: pa.Table, cap: int) -> pa.RecordBatch:
+    """Kernel 1: ``rows(clip_id, h, tr_len, sketch)`` → ``(short, longs)``.
 
-    One plan. Only a hash in some contained-side sketch can produce a match,
-    so the inverted index is semi-joined to the distinct sketch hashes (the
-    "union") right after the one shingle pass (``shingle_sets``): it then
-    holds every ``(clip, h)`` row of exactly those hashes, and a hash's
-    document frequency is its row count there — no separate df pass. The
-    stopword cut keeps the hashes with df ≤ ``hot_shingle_cap``, on both
-    the sketches and the index.
+    ``sketch`` marks a bottom-k sketch row of an eligible short, else the
+    row is a posting (the clip's shingle set holds ``h``); a clip has at
+    most one row of each kind per hash. A hash's df is its posting count.
+    For every sketch row whose hash has df ≤ ``cap``, emits the short and
+    the posting clips of that hash with a longer transcript (possibly
+    none: the row still counts toward the short's kept-sketch size). Hashes
+    no sketch holds emit nothing. ``rows`` must hold whole hashes."""
+    ids = pc.dictionary_encode(rows.column("clip_id").combine_chunks())
+    code = ids.indices.to_numpy()
+    h = rows.column("h").to_numpy()
+    ln = rows.column("tr_len").to_numpy().astype(np.int64)
+    sk = rows.column("sketch").to_numpy()
 
-    The only size-dependent choice is the broadcast hint on the union: it is
-    set while ``n_signatures × bottom_k × UNION_HASH_BYTES`` fits the driver
-    collect budget (``fits_collect_budget``); ``n_signatures`` is the
-    manifest row count when the caller has it, else one
-    ``signatures.count()`` runs."""
-    eligible = signatures.filter(F.col("n_shingles") >= cfg.min_substr_shingles)
-    sketch = eligible.select(
-        F.col("clip_id").alias("short"),
-        F.col("tr_len").alias("short_len"),
-        F.explode("sketch").alias("h"),
-    )
-    lens = signatures.select(F.col("clip_id").alias("long"), F.col("tr_len").alias("long_len"))
-    t_expr = F.greatest(
-        F.lit(cfg.containment_min_matches), F.ceil(F.col("sk_n") * 0.8)
-    )
+    # postings by (hash, length): each hash's clips are a run, ascending
+    o = np.lexsort((ln[~sk], h[~sk]))
+    ph, pl, pcode = h[~sk][o], ln[~sk][o], code[~sk][o]
+    sh, sl, scode = h[sk], ln[sk], code[sk]
+    first, end = np.searchsorted(ph, sh, "left"), np.searchsorted(ph, sh, "right")
+    keep = end - first <= cap
+    first, end, sl, scode = first[keep], end[keep], sl[keep], scode[keep]
 
-    union = sketch.select("h").distinct()
-    if fits_collect_budget(signatures, cfg.bottom_k * UNION_HASH_BYTES, n_signatures):
-        union = F.broadcast(union)
-    # eager (r6): the index feeds the df count, long_arrs and the generation
-    # join, whose stages the scheduler runs CONCURRENTLY — a lazy checkpoint
-    # lets them race to recompute the transcript-scan kernel (A/B at 200k:
-    # candidates stage 578 → 307 CPU-s cold with eager checkpoints here)
-    index = (
-        shingle_sets(clips, cfg)
-        .select("clip_id", F.explode("hs").alias("h"))
-        .join(union, "h", "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    keep = (
-        index.groupBy("h").agg(F.count("*").alias("df_"))
-        .filter(F.col("df_") <= cfg.hot_shingle_cap)
-    )
-    sketch = sketch.join(keep, "h")  # brings df_ for rarity
-    # hot-hash rows never count (every compared hash is kept) but would still
-    # flow through long_arrs and the generation join: at 20k clips they are
-    # 2.1M of the index's 3.0M rows
-    index = index.join(keep.select("h"), "h", "left_semi")
-
-    # per-short kept-sketch arrays, rarest-first; a sketch gutted by the hot
-    # cut (sk_n < containment_min_matches) carries no evidence: chance
-    # co-occurrence of one rare shingle would flood the verifier (measured
-    # ~340k false candidates at 100k docs)
-    short_arrs = (
-        sketch.groupBy("short", "short_len")
-        .agg(F.sort_array(F.collect_list(F.struct("df_", "h"))).alias("dh"))
-        .withColumn("sk_n", F.size("dh"))
-        .filter(F.col("sk_n") >= F.lit(cfg.containment_min_matches))
-        .withColumn("sh_arr", F.transform("dh", lambda s: s["h"]))
-        # pigeonhole generation set: a pair with matches ≥ t misses at most
-        # sk_n − t sketch hashes, so ANY (sk_n − t + 1)-subset contains a
-        # matching hash; taking the RAREST (lowest df) hashes minimizes the
-        # generation join's fan-out (prefix-filtering, guide §3.2 in spirit)
-        .withColumn(
-            "gen",
-            F.transform(
-                F.slice("dh", 1, (F.col("sk_n") - t_expr + 1).cast("int")),
-                lambda s: s["h"],
-            ),
-        )
-        .drop("dh")
-    )
-    # per-long kept-hash arrays (bounded by one transcript's vocabulary)
-    long_arrs = index.groupBy(F.col("clip_id").alias("long")).agg(
-        F.collect_list("h").alias("lh")
+    # (run start, length) orders the postings too, so one searchsorted finds
+    # each sketch row's first longer posting in its hash's run
+    m = ln.max() + 2
+    lo = np.searchsorted(np.searchsorted(ph, ph) * m + pl, first * m + sl, side="right")
+    n = np.maximum(end - lo, 0)
+    off = np.r_[0, np.cumsum(n)]
+    take = np.arange(off[-1]) + np.repeat(lo - off[:-1], n)
+    return pa.RecordBatch.from_arrays(
+        [ids.dictionary.take(pa.array(scode)),
+         pa.ListArray.from_arrays(pa.array(off, pa.int32()),
+                                  ids.dictionary.take(pa.array(pcode[take])))],
+        names=["short", "longs"],
     )
 
-    cand = (
-        short_arrs.select("short", F.explode("gen").alias("h"))
-        .join(index.withColumnRenamed("clip_id", "long"), "h")
-        .filter(F.col("short") != F.col("long"))
-        .select("short", "long")
-        .dropDuplicates(["short", "long"])
+
+def containment_pairs(rows: pa.Table, min_matches: int) -> pa.RecordBatch:
+    """Kernel 2: ``rows(short, longs)``, one row per kept sketch hash of each
+    short → the ``(short, long)`` pairs with matches ≥ t.
+
+    sk_n is a short's row count, t = max(``min_matches``, ⌈0.8·sk_n⌉) and a
+    pair's matches is the number of the short's rows listing the long. As
+    matches ≤ sk_n, t also enforces sk_n ≥ ``min_matches``: a sketch gutted
+    by the hot cut carries no evidence (chance co-occurrence of one rare
+    shingle would flood the verifier — measured ~340k false candidates at
+    100k docs). ``rows`` must hold whole shorts."""
+    shorts = pc.dictionary_encode(rows.column("short").combine_chunks())
+    lists = rows.column("longs").combine_chunks()
+    longs = pc.dictionary_encode(lists.flatten())
+    s = shorts.indices.to_numpy().astype(np.int64)
+    sk_n = np.bincount(s, minlength=len(shorts.dictionary))
+    t = np.maximum(min_matches, np.ceil(sk_n * 0.8))
+    n_long = max(len(longs.dictionary), 1)
+    key = np.repeat(s * n_long, pc.list_value_length(lists).to_numpy())
+    k, matches = np.unique(key + longs.indices.to_numpy(), return_counts=True)
+    a, b = np.divmod(k, n_long)
+    ok = matches >= t[a]
+    return pa.RecordBatch.from_arrays(
+        [shorts.dictionary.take(pa.array(a[ok])), longs.dictionary.take(pa.array(b[ok]))],
+        names=["short", "long"],
     )
-    # exact match count |kept sketch ∩ long's shingles| via set intersection,
-    # only for generated candidates (the 48M-row per-hash hits join at 200k
-    # becomes ~1-2M array ops)
-    return (
-        cand.join(short_arrs.select("short", "short_len", "sk_n", "sh_arr"), "short")
-        .join(long_arrs, "long")
-        .join(lens, "long")
-        .withColumn("matches", F.size(F.array_intersect("sh_arr", "lh")))
-        .filter(F.col("short_len") < F.col("long_len"))
-        .filter(F.col("matches") >= t_expr)
-        .select("short", "long")
+
+
+def containment_candidates(clips: DataFrame, signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """→ (short, long) candidate containment pairs: a short with at least
+    ``min_substr_shingles`` shingles, its kept sketch S′ (the sketch hashes
+    held by ≤ ``hot_shingle_cap`` clips) of size sk_n, and a long with a
+    longer transcript holding ≥ max(``containment_min_matches``,
+    ⌈0.8·sk_n⌉) of S′. One lazy plan: sketch and posting rows ``(clip_id,
+    h, tr_len)`` → ``repartition(n, "h")`` → ``sketch_hits`` →
+    ``repartition(n, "short")`` → ``containment_pairs``. The ``h`` task
+    holds every posting row of each of its hashes, hot ones included."""
+    id_type = signatures.schema["clip_id"].dataType
+    sketch = signatures.filter(F.col("n_shingles") >= cfg.min_substr_shingles).select(
+        "clip_id", F.explode("sketch").alias("h"), "tr_len", F.lit(True).alias("sketch")
+    )
+    postings = shingle_sets(clips, cfg).select(
+        "clip_id", F.explode("hs").alias("h"), "tr_len", F.lit(False).alias("sketch")
+    )
+    # n = the session's shuffle width, so AQE does not coalesce: by bytes it
+    # packs these narrow rows into one or two tasks, and each worker that
+    # runs the largest keeps its heap high-water (glibc trim threshold, see
+    # config.tune_allocator_env). dedup-1k on 4 CPUs: summed worker RSS
+    # 691 MB coalesced, 642 MB not
+    n = int(signatures.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    hits = sketch.unionByName(postings).repartition(n, "h").mapInArrow(
+        partial(whole_partition, kernel=partial(sketch_hits, cap=cfg.hot_shingle_cap)),
+        StructType([StructField("short", id_type), StructField("longs", ArrayType(id_type))]),
+    )
+    return hits.repartition(n, "short").mapInArrow(
+        partial(whole_partition, kernel=partial(
+            containment_pairs, min_matches=cfg.containment_min_matches)),
+        StructType([StructField("short", id_type), StructField("long", id_type)]),
     )
 
 

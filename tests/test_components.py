@@ -2,6 +2,7 @@
 adversarial over-cap star-bucket fixture (VERDICT r1 #8)."""
 
 import dataclasses
+from functools import partial
 
 import numpy as np
 import pytest
@@ -221,6 +222,102 @@ def test_bucket_pairs_matches_reference():
         seen |= {"sh" if s is not None else "no sh" for s in sh}
     assert seen >= {"size 1", "size cap", "size cap+1", "over-cap sh group",
                     "minhash", "srp", "sh", "no sh"}, seen
+
+
+def _containment_kernels_reference(shingles, sketches, tr_len, cap, min_matches):
+    """Plain-Python containment count: df over the shingle sets; per short,
+    its kept sketch (df ≤ ``cap``), sk_n, t = max(``min_matches``,
+    ⌈0.8·sk_n⌉), and every longer clip holding ≥ t kept hashes."""
+    import math
+    from collections import Counter
+
+    df = Counter(h for hs in shingles.values() for h in hs)
+    out = set()
+    for short, sketch in sketches.items():
+        kept = {h for h in sketch if df[h] <= cap}
+        if len(kept) < min_matches:
+            continue
+        t = max(min_matches, math.ceil(len(kept) * 0.8))
+        out |= {(short, long_) for long_, hs in shingles.items()
+                if tr_len[short] < tr_len[long_] and len(kept & hs) >= t}
+    return out
+
+
+def test_containment_kernels_match_reference():
+    """``sketch_hits`` then ``containment_pairs``, each run through
+    ``whole_partition`` over 3-row batches of hash- and short-partitioned
+    rows, against a plain-Python count on random layouts, which cover hashes
+    with df = cap and cap + 1, hashes no sketch holds, shorts with sk_n =
+    min_matches − 1 and min_matches, and equal transcript lengths."""
+    import math
+    from collections import Counter
+
+    import pyarrow as pa
+
+    from srpr_lsh_spark.operators.banding import whole_partition
+    from srpr_lsh_spark.operators.substring import containment_pairs, sketch_hits
+
+    def run(kernel, table, key, parts):
+        """One shuffle: every key's rows to one random partition of ``parts``."""
+        part = {k: int(rng.integers(parts)) for k in sorted(set(key))}
+        out = []
+        for p in range(parts):
+            rows = table.filter(pa.array([part[k] == p for k in key], pa.bool_()))
+            out += list(whole_partition(rows.to_batches(max_chunksize=3), kernel))
+        return pa.Table.from_batches(out, schema=out[0].schema) if out else None
+
+    rng = np.random.default_rng(11)
+    min_matches = 3
+    seen = set()
+    for trial in range(60):
+        cap = int(rng.integers(2, 6))
+        n = int(rng.integers(2, 14))
+        ids = [f"k{i}" for i in rng.permutation(n)]
+        pool = rng.integers(-2**63, 2**63 - 1, size=int(rng.integers(4, 16)))
+        shingles = {c: set(rng.choice(pool, int(rng.integers(0, len(pool))), replace=False)
+                           .tolist()) for c in ids}
+        for want_df in (cap, cap + 1):  # plant hashes with df = cap and cap + 1
+            h = int(rng.integers(-2**63, 2**63 - 1))
+            for c in rng.choice(ids, min(want_df, n), replace=False):
+                shingles[c].add(h)
+        tr_len = {c: int(rng.integers(5, 9)) for c in ids}
+        sketches = {c: set(rng.choice(sorted(hs), int(rng.integers(0, len(hs) + 1)),
+                                      replace=False).tolist())
+                    for c, hs in shingles.items() if hs and rng.random() < 0.7}
+        rows = [(c, h, tr_len[c], False) for c, hs in shingles.items() for h in hs]
+        rows += [(c, h, tr_len[c], True) for c, hs in sketches.items() for h in hs]
+        rows = [rows[i] for i in rng.permutation(len(rows))]
+        table = pa.table({
+            "clip_id": pa.array([r[0] for r in rows], pa.string()),
+            "h": pa.array([r[1] for r in rows], pa.int64()),
+            "tr_len": pa.array([r[2] for r in rows], pa.int32()),
+            "sketch": pa.array([r[3] for r in rows], pa.bool_()),
+        })
+        parts = int(rng.integers(1, 4))
+        hits = run(partial(sketch_hits, cap=cap), table, table.column("h").to_pylist(), parts)
+        got = []
+        if hits is not None:
+            pairs = run(partial(containment_pairs, min_matches=min_matches), hits,
+                        hits.column("short").to_pylist(), parts)
+            got = list(zip(*pairs.to_pydict().values())) if pairs is not None else []
+        assert len(got) == len(set(got)), trial
+        assert set(got) == _containment_kernels_reference(
+            shingles, sketches, tr_len, cap, min_matches), trial
+
+        df = Counter(h for hs in shingles.values() for h in hs)
+        held = set().union(*sketches.values()) if sketches else set()
+        seen |= {{cap: "df cap", cap + 1: "df cap+1"}.get(df[h]) for h in held}
+        seen |= {"no sketch" for h in df if h not in held}
+        for short, sketch in sketches.items():
+            kept = {h for h in sketch if df[h] <= cap}
+            seen.add({min_matches - 1: "sk_n min-1", min_matches: "sk_n min"}.get(len(kept)))
+            t = max(min_matches, math.ceil(len(kept) * 0.8))
+            if len(kept) >= min_matches and any(
+                    c != short and tr_len[c] == tr_len[short] and len(kept & hs) >= t
+                    for c, hs in shingles.items()):
+                seen.add("equal tr_len")
+    assert seen >= {"df cap", "df cap+1", "no sketch", "sk_n min-1", "sk_n min",
+                    "equal tr_len"}, seen
 
 
 class TestOverCapStarBucket:

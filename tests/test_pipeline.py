@@ -362,11 +362,10 @@ def _containment_reference(clip_rows, sig_rows, cfg) -> list:
     return sorted(out)
 
 
-def test_containment_matches_bruteforce_reference(spark, tmp_path, monkeypatch):
+def test_containment_matches_bruteforce_reference(spark, tmp_path):
     """``containment_candidates`` emits exactly the candidate set its
-    definition gives (``_containment_reference``), with and without the
-    union's broadcast hint, with and without hot shingles cut from the
-    sketches."""
+    definition gives (``_containment_reference``), with and without hot
+    shingles cut from the sketches."""
     import dataclasses
 
     from srpr_lsh_spark.operators.signatures import compute_signatures
@@ -388,8 +387,40 @@ def test_containment_matches_bruteforce_reference(spark, tmp_path, monkeypatch):
         return sorted(map(tuple, containment_candidates(clips, sigs, cfg).collect()))
 
     assert [rows(cfg) for cfg in cfgs] == want
-    _zero_collect_budget(monkeypatch)
-    assert [rows(cfg) for cfg in cfgs] == want
+
+
+def test_containment_candidates_independent_of_partition_shape(spark, tmp_path):
+    """Both containment kernels group per partition, not per Arrow batch:
+    with 3-row input batches, one or seven (uncoalesced) shuffle partitions
+    give the definition's rows (``_containment_reference``)."""
+    from srpr_lsh_spark.operators.signatures import compute_signatures
+    from srpr_lsh_spark.operators.substring import containment_candidates
+
+    params = SynthParams(n_clips=200, block_size=100, seed=48,
+                         min_dur_ms=300, max_dur_ms=600)
+    clips, _ = synthesize_clips(spark, params, out_dir=str(tmp_path / "d"))
+    sigs = compute_signatures(clips, CFG).localCheckpoint(eager=True)
+    want = _containment_reference(
+        clips.select("clip_id", "transcript").collect(),
+        sigs.select("clip_id", "n_shingles", "tr_len", "sketch").collect(), CFG)
+    assert want
+
+    keys = ("spark.sql.execution.arrow.maxRecordsPerBatch",
+            "spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for parts in ("1", "7"):
+            for k, v in zip(keys, ("3", parts, "false")):
+                spark.conf.set(k, v)
+            got = sorted(map(tuple, containment_candidates(clips, sigs, CFG).collect()))
+            assert got == want, parts
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 _OVER_BUDGET_PHASE1 = """

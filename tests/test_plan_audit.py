@@ -1,4 +1,4 @@
-"""The dedup half of the PLANS.md physical-plan audit (checks 4–7).
+"""The dedup half of the PLANS.md physical-plan audit (checks 4–8).
 
 Each check inspects the planned physical plan of the same frame PLANS.md
 documents, on a small synthetic clips corpus read back from parquet so scans
@@ -59,20 +59,14 @@ def test_candidates_exchanges_carry_no_audio_bytes(corpus):
 
 
 def test_containment_prunes_clips_scan(corpus):
-    """Containment's one transcript-scanning kernel reads only (clip_id,
-    transcript) from the clips parquet — inspected on the LIVE
-    ``shingle_sets`` frame, since the composed containment plan hides it
-    behind the eager index checkpoint."""
-    from srpr_lsh_spark.operators.signatures import shingle_sets
+    """Containment's one transcript-scanning kernel (``shingle_sets``) reads
+    only (clip_id, transcript) from the clips parquet, read off the composed
+    containment plan."""
     from srpr_lsh_spark.operators.substring import containment_candidates
 
     clips, res = corpus
-    frames = [
-        shingle_sets(clips, CFG),
-        containment_candidates(clips, res["signatures"], CFG),
-    ]
-    scans = [s for f in frames
-             for s in re.findall(r"ReadSchema: struct<([^>]*)>", _formatted(f))]
+    plan = _formatted(containment_candidates(clips, res["signatures"], CFG))
+    scans = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     clip_scans = [s for s in scans if "transcript" in s]
     assert clip_scans == ["clip_id:string,transcript:string"], scans
 
@@ -117,6 +111,26 @@ def test_candidates_plan_is_one_bucket_shuffle(corpus):
     assert len(shuffles) == 2, ops
     assert sum(bool(re.search(r"hashpartitioning\(band_id#\d+L?, band_hash#\d+L?, ", b))
                for b in shuffles) == 1, shuffles
+    assert "BroadcastExchange" not in ops, ops
+    assert not [op for op in ops if "Join" in op], ops
+    assert "ExistingRDD" not in plan, ops
+
+
+def test_containment_plan_is_two_shuffles(corpus):
+    """The containment candidates plan is the hash shuffle into the hit
+    kernel and the short shuffle into the count kernel: exactly two shuffle
+    Exchanges, ``hashpartitioning(h…)`` and ``hashpartitioning(short…)``,
+    with no broadcast, no join and no checkpoint read-back."""
+    from srpr_lsh_spark.operators.substring import containment_candidates
+
+    clips, _ = corpus
+    plan = _formatted(containment_candidates(clips, compute_signatures(clips, CFG), CFG))
+    blocks = [b.strip() for b in re.split(r"\n\n", plan)]
+    ops = [m.group(1) for b in blocks if (m := re.match(r"\(\d+\) (\w+)", b))]
+    shuffles = [b for b in blocks if re.match(r"\(\d+\) Exchange\b", b)]
+    keys = sorted(re.search(r"hashpartitioning\((\w+)#\d+L?, ", b).group(1)
+                  for b in shuffles if "hashpartitioning" in b)
+    assert len(shuffles) == 2 and keys == ["h", "short"], shuffles
     assert "BroadcastExchange" not in ops, ops
     assert not [op for op in ops if "Join" in op], ops
     assert "ExistingRDD" not in plan, ops
